@@ -61,8 +61,10 @@ FEATURES: tuple[str, ...] = (
 _NULL_DEFAULTS = {"days_since_last_login": 999}
 
 
-def feature_columns(df: DataFrame) -> list[Column]:
-    """The model's input columns with deterministic NULL handling."""
+def feature_columns() -> list[Column]:
+    """The model's input columns with deterministic NULL handling, in
+    FEATURES order — shared by training, the compiled scorer and the
+    importance report."""
     return [
         F.coalesce(F.col(c), F.lit(_NULL_DEFAULTS.get(c, 0))).cast("double").alias(c)
         for c in FEATURES
@@ -79,7 +81,7 @@ def train_churn_model(features_df: DataFrame, label_col: str = "churn_risk", see
     from pyspark.ml.feature import VectorAssembler
 
     prepped = features_df.select(
-        F.col(label_col).cast("double").alias(label_col), *feature_columns(features_df)
+        F.col(label_col).cast("double").alias(label_col), *feature_columns()
     )
     asm = VectorAssembler(inputCols=list(FEATURES), outputCol="__features")
     lr = LogisticRegression(
@@ -98,8 +100,7 @@ def score_expression(coefficients: dict[str, float], intercept: float) -> Column
     arithmetic, left-associated in FEATURES order so an oracle spelling
     the same sum reproduces it bit-for-bit."""
     z: Column = F.lit(float(intercept))
-    for c in FEATURES:
-        x = F.coalesce(F.col(c), F.lit(_NULL_DEFAULTS.get(c, 0))).cast("double")
+    for c, x in zip(FEATURES, feature_columns()):
         z = z + F.lit(float(coefficients[c])) * x
     return z
 
@@ -171,6 +172,7 @@ def streaming_churn_scores(
     bounded by source/sink IO alone.  A continuous deployment swaps the
     trigger and the sink path; the plan is identical.
     """
+    from realtimechurnpredictiondataengineering_spark.sources.batch import delta_scan
     from realtimechurnpredictiondataengineering_spark.sources.sinks import delta_stream_sink
     from realtimechurnpredictiondataengineering_spark.sources.streaming import file_stream
 
@@ -178,9 +180,7 @@ def streaming_churn_scores(
     scored = churn_scores(stream, coefficients, intercept)
     q = delta_stream_sink(scored, out_dir, checkpoint_dir)
     q.awaitTermination()
-    # the sandbox sink falls back to parquet (no Delta jars); on a
-    # cluster this read-back is spark.read.format("delta")
-    return spark.read.parquet(out_dir)
+    return delta_scan(spark, out_dir)
 
 
 def streaming_doc_quality_scores(
@@ -202,6 +202,7 @@ def streaming_doc_quality_scores(
     everything available, then returns the materialized scores."""
     from pyspark.sql import types as T
 
+    from realtimechurnpredictiondataengineering_spark.sources.batch import delta_scan
     from realtimechurnpredictiondataengineering_spark.sources.sinks import delta_stream_sink
     from realtimechurnpredictiondataengineering_spark.sources.streaming import file_stream
 
@@ -212,7 +213,7 @@ def streaming_doc_quality_scores(
     scored = doc_quality_scores(stream, coefficients, intercept)
     q = delta_stream_sink(scored, out_dir, checkpoint_dir)
     q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return delta_scan(spark, out_dir)
 
 
 #: Frozen offline training run: seed 7, sf0.01 Gold features,
@@ -408,12 +409,8 @@ def feature_importance(
     Returns (feature, coef, std, importance) with
     importance = snap(|coef| · std, 6).
     """
-    defaults = {"days_since_last_login": 999}
     aggs = [
-        F.stddev_samp(
-            F.coalesce(F.col(c), F.lit(defaults.get(c, 0))).cast("double")
-        ).alias(f"__s_{c}")
-        for c in FEATURES
+        F.stddev_samp(x).alias(f"__s_{c}") for c, x in zip(FEATURES, feature_columns())
     ]
     wide = features_df.agg(*aggs)
     pairs = ", ".join(f"'{c}', __s_{c}" for c in FEATURES)

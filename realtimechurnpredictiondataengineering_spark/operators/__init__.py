@@ -1,7 +1,6 @@
 """Relational + LLM-pipeline operators.
 
 - ``filters``    : Bronze demux + Silver validation chains (F1-F8, P1-P3)
-- ``aggregates`` : Gold feature aggregations (A1-A4 + standard extensions)
 - ``joins``      : enrichment joins (J1/J2) + inner/semi/anti/as-of
 - ``dedup``      : exact, MinHash-LSH, SimHash, n-gram Jaccard,
                    embedding-cosine near-dup (north star §2.10)
@@ -15,7 +14,6 @@ All pure DataFrame -> DataFrame, sink-free, unit-testable.
 """
 
 from realtimechurnpredictiondataengineering_spark.operators import (  # noqa: F401
-    aggregates,
     cdc,
     corpus,
     dedup,
@@ -30,7 +28,6 @@ from realtimechurnpredictiondataengineering_spark.operators import (  # noqa: F4
 )
 
 __all__ = [
-    "aggregates",
     "cdc",
     "corpus",
     "dedup",

@@ -5,6 +5,8 @@ jobs (Silver1.py:34-43,62-67,86-91,115-120); here each is a pure
 DataFrame→DataFrame function, so the same code path serves batch tests,
 the DuckDB oracle, and Structured Streaming (all operators below are
 streaming-safe: stateless projections/filters plus one stateful dedup).
+``SILVER_PIPELINES`` wires them per entity and ``silver_dedup`` is the one
+place the dedup policy is applied.
 
 Semantics preserved bug-for-bug where the reference's behavior is
 observable (SURVEY §7 hard-parts list):
@@ -18,11 +20,15 @@ observable (SURVEY §7 hard-parts list):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from realtimechurnpredictiondataengineering_spark.functions.scalar import to_date_col
+from realtimechurnpredictiondataengineering_spark.sources.generator import STATUSES, TOPICS
 
 # Explicit stream schemas (Bronze1.py:97-128, Silver1.py:24-32,55-60,
 # 79-84,103-113).  No inference — every stream parses against a declared
@@ -71,9 +77,11 @@ TICKET_SCHEMA = T.StructType(
 
 def demux(df: DataFrame, topic: str) -> DataFrame:
     """F1 — route one multiplexed ``(value, topic)`` stream to a single
-    topic's records (Bronze1.py:132-146).  A filter, so Catalyst pushes it
-    to the scan; N demuxes of one stream read the source once per
-    micro-batch (vs the reference's one-consumer-per-sink shape)."""
+    topic's records (Bronze1.py:132-146).  A plain filter over whatever
+    frame it is given: it does not share a scan between entities.  Each
+    Silver streaming query (``streaming.pipelines.silver_stream``) has its
+    own file source, so a drain of the four entities lists and reads the
+    landing directory four times, one per query."""
     return df.filter(F.col("topic") == topic)
 
 
@@ -113,49 +121,120 @@ def dedup_first_by(df: DataFrame, keys: list[str], order_cols: list[str]) -> Dat
     )
 
 
-def validate_profiles(df: DataFrame, deterministic: bool = False) -> DataFrame:
-    """Silver profile cleaning (Silver1.py:37-43): typed signup_date,
-    key-null drop, positive age, closed gender domain, test-account
-    scrubbing by substring+regex, key dedup.  ``deterministic`` swaps the
-    arbitrary-survivor dedup for the oracle-replayable first-by-order
-    pick (batch only)."""
-    base = (
-        df.withColumn("signup_date", to_date_col("signup_date"))
-        .dropna(subset=["customer_id", "email"])
-        .filter(F.col("age") > 0)
-        .filter(F.col("gender").isin("Male", "Female", "Other"))
-        .filter(not_contains("email", "test"))
-        .filter(not_rlike("name", "test|dummy|xyz"))
-    )
+def _ticket_rows(df: DataFrame, statuses: tuple[str, ...]) -> DataFrame:
+    """Silver1.py:118-119 with an explicit (case-sensitive, F5) status domain."""
+    return df.dropna(subset=["ticket_id", "customer_id"]).filter(F.col("status").isin(*statuses))
+
+
+class SilverPipeline(NamedTuple):
+    """One entity's Bronze->Silver wiring (Silver1.py:34-131).  ``rows`` is
+    the validation chain minus dedup, a DataFrame chain so the plan is the
+    reference's exact filter sequence; ``keys`` are the dedup keys (F8;
+    the first is also the Kafka wire key); ``order`` is the survivor order
+    of the deterministic (oracle) dedup pick."""
+
+    topic: str
+    schema: T.StructType
+    rows: Callable[[DataFrame], DataFrame]
+    keys: tuple[str, ...]
+    order: tuple[str, ...]
+
+
+#: entity -> wiring.  The only place that knows an entity's topic, schema,
+#: predicates, dedup keys and survivor order: the streaming queries, the
+#: batch twin and the validators all read it.
+SILVER_PIPELINES: dict[str, SilverPipeline] = {
+    # Silver1.py:37-43: typed signup_date, key-null drop, positive age,
+    # closed gender domain, test-account scrubbing by substring+regex
+    "profiles": SilverPipeline(
+        TOPICS[0],
+        PROFILE_SCHEMA,
+        lambda df: (
+            df.withColumn("signup_date", to_date_col("signup_date"))
+            .dropna(subset=["customer_id", "email"])
+            .filter(F.col("age") > 0)
+            .filter(F.col("gender").isin("Male", "Female", "Other"))
+            .filter(not_contains("email", "test"))
+            .filter(not_rlike("name", "test|dummy|xyz"))
+        ),
+        ("customer_id",),
+        ("name", "email", "age", "gender", "location", "signup_date"),
+    ),
+    # Silver1.py:65-67; the key's event_time is never populated, verbatim:
+    # nulls compare equal in dropDuplicates, so one row per customer
+    "usage": SilverPipeline(
+        TOPICS[1],
+        USAGE_SCHEMA,
+        lambda df: df.dropna(subset=["customer_id"]).filter(F.col("sessions_last_30d") >= 0),
+        ("customer_id", "event_time"),
+        ("sessions_last_30d", "last_login"),
+    ),
+    # Silver1.py:89-91
+    "transactions": SilverPipeline(
+        TOPICS[2],
+        TRANSACTION_SCHEMA,
+        lambda df: df.dropna(subset=["customer_id", "value"]).filter(F.col("value") > 0),
+        ("customer_id", "event_time"),
+        ("event_type", "value"),
+    ),
+    # the producer's own lower-case status domain, so Silver output is
+    # non-empty; ``validate_tickets`` keeps the reference's capitalized one
+    "tickets": SilverPipeline(
+        TOPICS[3],
+        TICKET_SCHEMA,
+        lambda df: _ticket_rows(df, STATUSES),
+        ("ticket_id",),
+        ("customer_id", "status", "issue", "resolution_time"),
+    ),
+}
+
+
+def silver_dedup(
+    df: DataFrame, entity: str, deterministic: bool = False, event_time: str | None = None
+) -> DataFrame:
+    """The Silver dedup policy on the entity's keys; no other Silver path
+    dedups.  Default (streaming and batch): ``dropDuplicates``, the
+    reference's unwatermarked state store (Silver1.py:41).
+    ``deterministic`` (batch only): ``dedup_first_by`` the entity's
+    survivor order, for the oracle.  ``event_time`` (streaming, ST3):
+    ``withWatermark`` + ``dropDuplicatesWithinWatermark`` INSTEAD of the
+    unbounded dedup — a key is remembered for 10 minutes, not forever."""
+    p = SILVER_PIPELINES[entity]
+    keys = list(p.keys)
+    if event_time is not None:
+        return df.withWatermark(event_time, "10 minutes").dropDuplicatesWithinWatermark(keys)
     if deterministic:
-        return dedup_first_by(
-            base,
-            ["customer_id"],
-            ["name", "email", "age", "gender", "location", "signup_date"],
-        )
-    return base.dropDuplicates(["customer_id"])
+        return dedup_first_by(df, keys, list(p.order))
+    return df.dropDuplicates(keys)
 
 
-def validate_usage(df: DataFrame, deterministic: bool = False) -> DataFrame:
-    """Silver app-usage cleaning (Silver1.py:65-67).  Dedup key includes
-    the always-null event_time — preserved verbatim (collapses to one row
-    per customer because nulls compare equal in dropDuplicates)."""
-    base = df.dropna(subset=["customer_id"]).filter(F.col("sessions_last_30d") >= 0)
-    if deterministic:
-        return dedup_first_by(
-            base, ["customer_id", "event_time"], ["sessions_last_30d", "last_login"]
-        )
-    return base.dropDuplicates(["customer_id", "event_time"])
+def silver_frame(
+    raw: DataFrame, entity: str, deterministic: bool = False, dedup_event_time: str | None = None
+) -> DataFrame:
+    """Bronze ``(value, topic)`` frame -> one cleaned Silver entity, batch
+    or streaming alike: parse the entity's topic, its rows, its dedup."""
+    p = SILVER_PIPELINES[entity]
+    rows = p.rows(parse_topic(raw, p.topic, p.schema))
+    return silver_dedup(rows, entity, deterministic, dedup_event_time)
 
 
-def validate_transactions(df: DataFrame, deterministic: bool = False) -> DataFrame:
-    """Silver transaction cleaning (Silver1.py:89-91)."""
-    base = df.dropna(subset=["customer_id", "value"]).filter(F.col("value") > 0)
-    if deterministic:
-        return dedup_first_by(
-            base, ["customer_id", "event_time"], ["event_type", "value"]
-        )
-    return base.dropDuplicates(["customer_id", "event_time"])
+def _validate(entity: str, df: DataFrame) -> DataFrame:
+    return silver_dedup(SILVER_PIPELINES[entity].rows(df), entity)
+
+
+def validate_profiles(df: DataFrame) -> DataFrame:
+    """Silver profile cleaning + key dedup (Silver1.py:37-43)."""
+    return _validate("profiles", df)
+
+
+def validate_usage(df: DataFrame) -> DataFrame:
+    """Silver app-usage cleaning + dedup (Silver1.py:65-67)."""
+    return _validate("usage", df)
+
+
+def validate_transactions(df: DataFrame) -> DataFrame:
+    """Silver transaction cleaning + dedup (Silver1.py:89-91)."""
+    return _validate("transactions", df)
 
 
 def validate_tickets(df: DataFrame) -> DataFrame:
@@ -166,18 +245,9 @@ def validate_tickets(df: DataFrame) -> DataFrame:
     return validate_tickets_with_domain(df, ("Open", "In Progress", "Resolved", "Closed"))
 
 
-def validate_tickets_with_domain(
-    df: DataFrame, statuses: tuple[str, ...], deterministic: bool = False
-) -> DataFrame:
+def validate_tickets_with_domain(df: DataFrame, statuses: tuple[str, ...]) -> DataFrame:
     """Ticket cleaning with an explicit (case-sensitive, F5) status domain."""
-    base = df.dropna(subset=["ticket_id", "customer_id"]).filter(
-        F.col("status").isin(*statuses)
-    )
-    if deterministic:
-        return dedup_first_by(
-            base, ["ticket_id"], ["customer_id", "status", "issue", "resolution_time"]
-        )
-    return base.dropDuplicates(["ticket_id"])
+    return silver_dedup(_ticket_rows(df, statuses), "tickets")
 
 
 def quarantine(

@@ -5,9 +5,10 @@ snapshots and left-joins them into one enrichment table with derived
 columns.  Here the same shapes run on the driver's star schema:
 
 - ``orders``  plays the transactions stream → revenue features (A3)
-- ``events``  plays app_usage → activity/recency features (A1) and the
+- ``events``  plays app_usage → activity/recency features (A1), the
   filtered decline features (A2; ``error`` events play payment declines)
-- ``events``  props play support tickets → pseudo-sentiment (A4, P11)
+  and, via props, support tickets → pseudo-sentiment (A4, P11); all three
+  come from one fused aggregation (``event_features``)
 - ``customer`` (+``nation`` broadcast) plays the profile table → J2 chain
 
 Scale shape: every feature frame aggregates on the SAME key the final
@@ -44,69 +45,22 @@ def revenue_features(orders: DataFrame) -> DataFrame:
     )
 
 
-def activity_features(events: DataFrame, as_of: Column) -> DataFrame:
-    """A1 — recency + volume per user (Gold1.py:63-67 shape)."""
-    return (
-        events.groupBy(F.col("user_id").alias("customer_id"))
-        .agg(F.max("ts").alias("_last_seen"), F.count("*").alias("sessions"))
-        .select(
-            "customer_id",
-            F.datediff(as_of, F.col("_last_seen")).alias("days_since_last_login"),
-            "sessions",
-        )
-    )
-
-
-def decline_features(events: DataFrame) -> DataFrame:
-    """A2 — sum/avg over the filtered 'decline' subset (Gold1.py:71-76;
-    ``error`` events play payment_decline).  Rounded via
-    ``portable_round2`` (non-negative event values by the events-table
-    contract, its precondition) so the modular path and the fused
-    ``event_features`` path stay cent-identical on cross-engine
-    half-ulp boundaries."""
-    return (
-        events.filter(F.col("event_type") == "error")
-        .groupBy(F.col("user_id").alias("customer_id"))
-        .agg(
-            portable_round2(F.sum("value")).alias("total_declined"),
-            portable_round2(F.avg("value")).alias("avg_declined"),
-        )
-    )
-
-
-def support_features(events: DataFrame) -> DataFrame:
-    """A4 — null-tolerant avg + deterministic pseudo-sentiment (P11) over
-    the ticket-like subset (Gold1.py:87-92 shape)."""
-    # Sentiment averages the INTEGER hash bucket and divides by 10 at the
-    # end: integer sums are order-independent and exact in both engines,
-    # whereas averaging 0.1-multiples directly hits round(.,4) boundary
-    # flips between Spark's and DuckDB's summation orders.
-    bucket = F.ascii(F.substring(F.md5("props"), 1, 1)) % 10
-    return (
-        events.filter(F.col("event_type") == "signup")
-        .groupBy(F.col("user_id").alias("customer_id"))
-        .agg(
-            # portable_round2 (non-negative resolution times, its
-            # precondition): keeps this frame cent-identical to the
-            # fused event_features path on half-ulp boundaries
-            portable_round2(F.avg("value")).alias("avg_resolution_time"),
-            F.round(F.avg(bucket) / 10.0, 4).alias("avg_ticket_sentiment"),
-        )
-    )
-
-
 def event_features(events: DataFrame, as_of: Column) -> DataFrame:
-    """A1 + A2 + A4 in ONE aggregation pass via conditional aggregates.
+    """A1 (recency + volume, Gold1.py:63-67), A2 (declines, Gold1.py:71-76;
+    ``error`` events play payment_decline) and A4 (resolution time +
+    pseudo-sentiment, Gold1.py:87-92) in ONE aggregation pass.
 
-    The modular per-feature frames (``activity_features``,
-    ``decline_features``, ``support_features``) each shuffle the events
-    fact table on the same key — at 100 TB that is three scans and three
-    shuffles of the biggest input for one output.  Conditional
-    aggregation (`agg(f(when(pred, col)))`) computes all three feature
-    families in a single scan + single shuffle with IDENTICAL left-join
-    semantics: an aggregate over an empty conditional subset is null,
-    exactly what the per-frame left join produced for a customer with no
-    matching rows.
+    The reference builds one frame per feature family and left-joins
+    them; each would shuffle the events fact table on the same key.
+    Conditional aggregation (`agg(f(when(pred, col)))`) computes all
+    three families in a single scan + single shuffle with the same
+    left-join semantics: an aggregate over an empty conditional subset
+    is null, exactly what a per-frame left join gives a customer with no
+    matching rows.  Sentiment averages the INTEGER hash bucket and
+    divides by 10 at the end: integer sums are order-independent and
+    exact in both engines, whereas averaging 0.1-multiples directly hits
+    round(.,4) boundary flips between Spark's and DuckDB's summation
+    orders.
     """
     is_decline = F.col("event_type") == "error"
     is_ticket = F.col("event_type") == "signup"
@@ -139,9 +93,10 @@ def event_features(events: DataFrame, as_of: Column) -> DataFrame:
 def churn_features(spark, sf_dir: str, as_of: str = DEFAULT_AS_OF) -> DataFrame:
     """The flagship enrichment (J2 + A1-A4 + P8/P10-P12 + P15).
 
-    customer ⟕ revenue ⟕ activity ⟕ declines ⟕ support, nation name via
-    broadcast, then derived ARPU and a rule-based churn flag, projected
-    to the final feature schema (14 cols, Gold1.py:101-106 shape).
+    customer ⟕ revenue ⟕ event features (activity, declines, support),
+    nation name via broadcast, then derived ARPU and a rule-based churn
+    flag, projected to the final feature schema (14 cols, Gold1.py:101-106
+    shape).
     """
     anchor = F.to_timestamp(F.lit(as_of))
     customer = load_table(spark, "customer", sf_dir)

@@ -32,7 +32,7 @@ from realtimechurnpredictiondataengineering_spark.operators import dedup, joins,
 from realtimechurnpredictiondataengineering_spark.operators import urls as urlops
 from realtimechurnpredictiondataengineering_spark.operators.partitioning import stage_hot_table
 from realtimechurnpredictiondataengineering_spark.plans.gold import DEFAULT_AS_OF, churn_features
-from realtimechurnpredictiondataengineering_spark.sources.batch import load_table
+from realtimechurnpredictiondataengineering_spark.sources.batch import delta_scan, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -3691,7 +3691,7 @@ def ll17(spark, sf_dir):
     with scoped_stream_width(spark):
         q = delta_stream_sink(out, f"{base}/out", f"{base}/ck")
         q.awaitTermination()
-    return spark.read.parquet(f"{base}/out")
+    return delta_scan(spark, f"{base}/out")
 
 
 def _avi_fixture_path() -> str:
@@ -9785,7 +9785,7 @@ def ll14(spark, sf_dir):
     with scoped_stream_width(spark):
         q = delta_stream_sink(out, f"{base}/out", f"{base}/ck")
         q.awaitTermination()
-    return spark.read.parquet(f"{base}/out")
+    return delta_scan(spark, f"{base}/out")
 
 
 @register("t24_stupid_backoff", _T24_SQL)

@@ -50,6 +50,8 @@ def run_medallion(
 ) -> DataFrame:
     """Producer → Bronze/Silver streams → Gold features, end to end.
 
+    ``entities`` is any subset of ``SILVER_PIPELINES``; pass
+    ``tuple(SILVER_PIPELINES)`` for the full Silver1.py surface.
     Returns the Gold feature DataFrame (also appended under
     ``{workdir}/gold``).  Uses the driver star schema for the Gold joins
     (SURVEY §7 step 1 mapping) and the generator feed for the streaming
@@ -59,10 +61,13 @@ def run_medallion(
     existing directory — regenerating would write new part filenames
     that the checkpointed file source rightly treats as new data), so a
     rerun's AvailableNow drain finds nothing new and is a cheap no-op.
-    Row-level idempotence additionally rests on the validators' stateful
-    dedup, faithful to the reference's Silver design (Silver1.py:41) —
-    NOT on checkpoints alone.
+    Row-level idempotence additionally rests on the streams' stateful
+    dedup (``operators.filters.silver_dedup``), faithful to the
+    reference's Silver design (Silver1.py:41) — NOT on checkpoints alone.
     """
+    unknown = set(entities) - SILVER_PIPELINES.keys()
+    if unknown:  # before any query starts, so none is left running
+        raise KeyError(f"unknown Silver entities: {sorted(unknown)}")
     feed = f"{workdir}/feed"
     if not os.path.isdir(feed):
         synthetic_topic_feed(spark, n_per_topic).coalesce(2).write.mode("overwrite").json(feed)
@@ -110,17 +115,3 @@ def gold_report_frames(gold: DataFrame, max_rows: int = 10_000) -> dict[str, pd.
         ),
     }
 
-
-def run_silver_all(spark: SparkSession, workdir: str, feed_path: str) -> None:
-    """All four reference entities through the dual-sink Silver path —
-    the full Silver1.py surface (profiles, usage, transactions, tickets)."""
-    queries = [
-        run_silver_dual_sink(
-            spark, entity, feed_path, f"{workdir}/silver/{entity}", f"{workdir}/ckpt/{entity}"
-        )
-        for entity in SILVER_PIPELINES
-    ]
-    for q in queries:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("silver stream did not drain within 300s")

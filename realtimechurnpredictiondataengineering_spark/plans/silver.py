@@ -1,8 +1,8 @@
 """Silver layer: batch twin of the streaming validation chains.
 
-The validation logic lives in ``operators.filters`` (pure functions used
-verbatim by the streaming pipelines in ``streaming.pipelines``); this
-module wires them to the synthetic generator feed so the full
+The per-entity wiring lives in ``operators.filters.SILVER_PIPELINES``
+(read verbatim by the streaming pipelines in ``streaming.pipelines``);
+this module runs it over the synthetic generator feed so the full
 Bronze→Silver path is runnable — and oracle-comparable — as a batch job.
 """
 
@@ -13,17 +13,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from realtimechurnpredictiondataengineering_spark.operators.filters import (
-    PROFILE_SCHEMA,
-    TICKET_SCHEMA,
-    TRANSACTION_SCHEMA,
-    USAGE_SCHEMA,
-    parse_topic,
-    validate_profiles,
-    validate_tickets_with_domain,
-    validate_transactions,
-    validate_usage,
+    SILVER_PIPELINES,
+    silver_frame,
 )
-from realtimechurnpredictiondataengineering_spark.sources.generator import TOPICS, synthetic_topic_feed
+from realtimechurnpredictiondataengineering_spark.sources.generator import synthetic_topic_feed
 
 
 FEED_FIXTURE = os.path.join(
@@ -35,28 +28,14 @@ FEED_FIXTURE = os.path.join(
 
 def silver_tables_from_feed(feed: DataFrame, deterministic: bool = False) -> dict[str, DataFrame]:
     """Bronze feed → four cleaned Silver frames (Silver1.py:34-131 shape,
-    minus sinks).  Uses the fixed-case status domain so output is
-    non-empty; ``operators.filters.validate_tickets`` preserves the
-    reference's empty-set quirk for parity tests.  ``deterministic``
-    swaps the arbitrary-survivor dedups for the oracle-replayable
-    first-by-order pick (batch only) — how the sv01-sv04 twins become
-    value-checked against the materialized fixture."""
-    return {
-        "profiles": validate_profiles(
-            parse_topic(feed, TOPICS[0], PROFILE_SCHEMA), deterministic=deterministic
-        ),
-        "usage": validate_usage(
-            parse_topic(feed, TOPICS[1], USAGE_SCHEMA), deterministic=deterministic
-        ),
-        "transactions": validate_transactions(
-            parse_topic(feed, TOPICS[2], TRANSACTION_SCHEMA), deterministic=deterministic
-        ),
-        "tickets": validate_tickets_with_domain(
-            parse_topic(feed, TOPICS[3], TICKET_SCHEMA),
-            ("open", "closed", "pending"),
-            deterministic=deterministic,
-        ),
-    }
+    minus sinks), one per ``SILVER_PIPELINES`` entity.  Tickets use the
+    producer's lower-case status domain so output is non-empty;
+    ``operators.filters.validate_tickets`` preserves the reference's
+    empty-set quirk for parity tests.  ``deterministic`` swaps the
+    arbitrary-survivor dedups for the oracle-replayable first-by-order
+    pick (batch only) — how the sv01-sv04 twins become value-checked
+    against the materialized fixture."""
+    return {e: silver_frame(feed, e, deterministic=deterministic) for e in SILVER_PIPELINES}
 
 
 def silver_tables(spark: SparkSession, n_per_topic: int = 1000, seed: str = "42") -> dict[str, DataFrame]:

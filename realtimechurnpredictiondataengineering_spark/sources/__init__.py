@@ -10,6 +10,7 @@ neither; the code paths are real and the formats plug in on a cluster.
 from realtimechurnpredictiondataengineering_spark.sources.batch import (
     TABLES,
     convert_to_parquet,
+    delta_available,
     delta_scan,
     load_table,
     load_tables,
@@ -40,6 +41,7 @@ from realtimechurnpredictiondataengineering_spark.sources.streaming import (
 __all__ = [
     "TABLES",
     "convert_to_parquet",
+    "delta_available",
     "delta_scan",
     "load_table",
     "read_format",

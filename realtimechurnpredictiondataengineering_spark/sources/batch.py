@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,24 +72,34 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
         load_table(spark, name, sf_dir).createOrReplaceTempView(name)
 
 
+_DELTA_AVAILABLE: bool | None = None
+
+
+def delta_available(spark: SparkSession) -> bool:
+    """Whether Delta Lake is on the JVM classpath — the one decision every
+    Delta reader and writer here takes (``delta_scan``,
+    ``sinks.delta_batch_append``, ``sinks.delta_stream_sink``).  Probed
+    once per process: PySpark starts one JVM per Python process and its
+    classpath does not change."""
+    global _DELTA_AVAILABLE
+    if _DELTA_AVAILABLE is None:
+        try:
+            spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")  # noqa: SLF001
+            _DELTA_AVAILABLE = True
+        except Py4JJavaError:  # wraps ClassNotFoundException
+            _DELTA_AVAILABLE = False
+    return _DELTA_AVAILABLE
+
+
 def delta_scan(spark: SparkSession, path: str) -> DataFrame:
-    """Delta batch scan (S3). Falls back to parquet ONLY when the Delta
-    format itself is unavailable on the classpath (this container); any
-    other error — corrupt log, bad path — re-raises, because silently
-    reading a real Delta directory as raw parquet would ignore the
-    transaction log and return deleted/uncommitted files."""
-    try:
+    """Delta batch scan (S3). Reads parquet ONLY when Delta is not on the
+    classpath (``delta_available``).  With Delta present every error —
+    corrupt log, bad path, a directory that is not a Delta table — raises,
+    because silently reading a real Delta directory as raw parquet would
+    ignore the transaction log and return deleted/uncommitted files."""
+    if delta_available(spark):
         return spark.read.format("delta").load(path)
-    except Exception as exc:  # noqa: BLE001 - classified below
-        msg = str(exc)
-        delta_missing = (
-            "Failed to find data source: delta" in msg
-            or "DATA_SOURCE_NOT_FOUND" in msg
-            or "ClassNotFoundException" in msg
-        )
-        if not delta_missing:
-            raise
-        return spark.read.parquet(path)
+    return spark.read.parquet(path)
 
 
 def read_format(

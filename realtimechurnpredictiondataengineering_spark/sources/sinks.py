@@ -16,16 +16,9 @@ from collections.abc import Callable
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 
-
-def _format_available(spark: SparkSession, classname: str) -> bool:
-    """Probe the JVM classpath once for an optional sink format."""
-    try:
-        spark._jvm.java.lang.Class.forName(classname)  # noqa: SLF001
-        return True
-    except Exception:
-        return False
+from realtimechurnpredictiondataengineering_spark.sources.batch import delta_available
 
 
 def keyed_json(df: DataFrame, key_col: str) -> DataFrame:
@@ -46,22 +39,20 @@ def delta_stream_sink(
     path: str,
     checkpoint: str,
     output_mode: str = "append",
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Delta streaming append with a per-query checkpoint (K1;
-    Bronze1.py:151-173).  Falls back to parquet when Delta jars are absent
-    — the checkpoint/exactly-once mechanics are identical."""
-    fmt = "delta" if _format_available(df.sparkSession, "io.delta.tables.DeltaTable") else "parquet"
-    writer = (
-        df.writeStream.format(fmt)
+    Bronze1.py:151-173) under ``Trigger.AvailableNow``, the idiomatic
+    replacement for the reference's sleep-loop cadence (ST1;
+    Gold1.py:144-146): drain everything available, then stop.  Falls back
+    to parquet when Delta jars are absent — the checkpoint/exactly-once
+    mechanics are identical; read it back with ``batch.delta_scan``."""
+    return (
+        df.writeStream.format("delta" if delta_available(df.sparkSession) else "parquet")
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start(path)
     )
-    if trigger_available_now:
-        # Idiomatic replacement for the reference's sleep-loop cadence
-        # (ST1; Gold1.py:144-146): drain everything available, then stop.
-        writer = writer.trigger(availableNow=True)
-    return writer.start(path)
 
 
 def kafka_stream_sink(
@@ -110,7 +101,6 @@ def foreach_batch_dual_sink(
     df: DataFrame,
     checkpoint: str,
     *sinks: Callable[[DataFrame, int], None],
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """One streaming query fanning out to N sinks per micro-batch.
 
@@ -130,12 +120,12 @@ def foreach_batch_dual_sink(
         finally:
             batch_df.unpersist()
 
-    writer: DataStreamWriter = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
+    return (
+        df.writeStream.foreachBatch(_write)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def await_any_termination(spark: SparkSession, timeout_sec: float | None = None) -> bool | None:
@@ -152,16 +142,11 @@ def await_any_termination(spark: SparkSession, timeout_sec: float | None = None)
 # --- batch sinks -----------------------------------------------------------
 
 
-def delta_batch_append(df: DataFrame, path: str, overwrite_schema: bool = True) -> None:
-    """Delta batch append with schema merge (K3; Gold1.py:111-114).
+def delta_batch_append(df: DataFrame, path: str) -> None:
+    """Delta batch append with ``overwriteSchema`` (K3; Gold1.py:111-114).
     Parquet-append fallback without the Delta jars."""
-    if _format_available(df.sparkSession, "io.delta.tables.DeltaTable"):
-        (
-            df.write.format("delta")
-            .mode("append")
-            .option("overwriteSchema", str(overwrite_schema).lower())
-            .save(path)
-        )
+    if delta_available(df.sparkSession):
+        df.write.format("delta").mode("append").option("overwriteSchema", "true").save(path)
     else:
         df.write.mode("append").parquet(path)
 

@@ -64,40 +64,18 @@ def file_stream(
     path: str,
     schema: T.StructType,
     fmt: str = "json",
-    max_files_per_trigger: int | None = None,
-    **options: str,
 ) -> DataFrame:
     """File-source streaming scan — the test-harness stand-in for Kafka.
-
-    Explicit schema is mandatory (streaming file sources do not infer);
-    ``maxFilesPerTrigger`` plays the role of the Kafka rate cap (S2).
-    Extra ``options`` pass through to the reader (e.g. ``basePath`` when
-    ``path`` names a single file — the source requires a directory base).
-    """
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)
+    Explicit schema is mandatory (streaming file sources do not infer)."""
+    return spark.readStream.schema(schema).format(fmt).load(path)
 
 
-def json_topic_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def json_topic_stream(spark: SparkSession, path: str) -> DataFrame:
     """File stream of ``{"value": <json string>, "topic": <topic>}`` rows —
     byte-compatible with what ``kafka_stream`` returns, so every Bronze/
     Silver pipeline runs unchanged under test (SURVEY §2.1 S1 note).
     """
-    return file_stream(
-        spark,
-        path,
-        VALUE_TOPIC_SCHEMA,
-        fmt="json",
-        max_files_per_trigger=max_files_per_trigger,
-    )
+    return file_stream(spark, path, VALUE_TOPIC_SCHEMA, fmt="json")
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:

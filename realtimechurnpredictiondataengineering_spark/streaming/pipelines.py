@@ -7,68 +7,29 @@ Silver1.py:41), and drives Gold with a 60 s sleep loop (Gold1.py:144-146).
 
 This module keeps the semantics and fixes the shapes:
 - one source read per entity, ``foreachBatch`` fanning out to N sinks;
-- ``withWatermark`` + ``dropDuplicatesWithinWatermark`` bounds dedup
-  state (the reference's unbounded mode stays available via
-  ``bounded_state=False``);
+- ``dedup_event_time`` swaps the unbounded dedup for ``withWatermark`` +
+  ``dropDuplicatesWithinWatermark``, which bounds dedup state;
 - ``Trigger.AvailableNow`` replaces the sleep loop: drain everything,
   checkpoint, exit — rerunnable on any cadence with exactly-once sinks.
 
-All transformation logic is the SAME pure functions the batch plans use
-(``operators.filters``) — streaming here only adds sources, state policy
-and sinks.
+All transformation logic is the SAME pure functions the batch plans use:
+``operators.filters.SILVER_PIPELINES`` is the per-entity wiring and
+``silver_frame`` builds an entity from it — streaming here only adds
+sources and sinks.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from realtimechurnpredictiondataengineering_spark.operators.filters import (
-    PROFILE_SCHEMA,
-    TICKET_SCHEMA,
-    TRANSACTION_SCHEMA,
-    USAGE_SCHEMA,
-    parse_topic,
-    validate_profiles,
-    validate_tickets_with_domain,
-    validate_transactions,
-    validate_usage,
+    SILVER_PIPELINES,
+    silver_frame,
 )
-from realtimechurnpredictiondataengineering_spark.sources.generator import TOPICS
 from realtimechurnpredictiondataengineering_spark.sources.sinks import foreach_batch_dual_sink
 from realtimechurnpredictiondataengineering_spark.sources.streaming import json_topic_stream
-
-#: entity -> (topic, parse schema, validate fn) — the Silver wiring table.
-SILVER_PIPELINES: dict[str, tuple[str, object, Callable[[DataFrame], DataFrame]]] = {
-    "profiles": (TOPICS[0], PROFILE_SCHEMA, validate_profiles),
-    "usage": (TOPICS[1], USAGE_SCHEMA, validate_usage),
-    "transactions": (TOPICS[2], TRANSACTION_SCHEMA, validate_transactions),
-    "tickets": (
-        TOPICS[3],
-        TICKET_SCHEMA,
-        lambda df: validate_tickets_with_domain(df, ("open", "closed", "pending")),
-    ),
-}
-
-
-def watermarked_dedup(
-    df: DataFrame,
-    keys: list[str],
-    event_time: str,
-    delay: str = "10 minutes",
-    bounded_state: bool = True,
-) -> DataFrame:
-    """ST3 — the principled variant of the reference's unbounded
-    ``dropDuplicates`` (Silver1.py:41): a watermark bounds how long a key
-    is remembered, so state is O(keys-per-delay-window) instead of
-    O(all keys ever).  ``bounded_state=False`` reproduces the reference's
-    grow-forever mode."""
-    if not bounded_state:
-        return df.dropDuplicates(keys)
-    return df.withWatermark(event_time, delay).dropDuplicatesWithinWatermark(keys)
 
 
 def silver_stream(
@@ -76,19 +37,14 @@ def silver_stream(
     entity: str,
     source_path: str,
     dedup_event_time: str | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Bronze→Silver for one entity as an unstarted streaming DataFrame:
     file-source stand-in for Kafka (same (value, topic) contract) →
-    demux → JSON parse → validation chain."""
-    topic, schema, validate = SILVER_PIPELINES[entity]
-    raw = json_topic_stream(spark, source_path, max_files_per_trigger=max_files_per_trigger)
-    cleaned = validate(parse_topic(raw, topic, schema))
-    if dedup_event_time is not None:
-        cleaned = watermarked_dedup(
-            cleaned, [c for c in cleaned.columns if c.endswith("_id")], dedup_event_time
-        )
-    return cleaned
+    demux → JSON parse → validation chain → dedup on the entity's keys
+    (watermarked on ``dedup_event_time`` when given, ST3)."""
+    return silver_frame(
+        json_topic_stream(spark, source_path), entity, dedup_event_time=dedup_event_time
+    )
 
 
 def run_silver_dual_sink(
@@ -100,11 +56,12 @@ def run_silver_dual_sink(
 ) -> StreamingQuery:
     """One streaming query, two sinks (parquet 'Delta' table + keyed-JSON
     'Kafka' shape written as parquet) via foreachBatch — the fixed
-    1-consumer shape of Silver1.py:45-52/133-137 (SURVEY §3.2)."""
+    1-consumer shape of Silver1.py:45-52/133-137 (SURVEY §3.2).  The wire
+    key is the entity's first dedup key."""
     from realtimechurnpredictiondataengineering_spark.sources.sinks import keyed_json
 
     cleaned = silver_stream(spark, entity, source_path)
-    key_col = next(c for c in cleaned.columns if c.endswith("_id"))
+    key_col = SILVER_PIPELINES[entity].keys[0]
 
     def table_sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(f"{out_path}/table")

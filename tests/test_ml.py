@@ -34,7 +34,7 @@ def test_compiled_expression_matches_model_transform(spark, feats, model):
     prepped = feats.select(
         "customer_id",
         F.col("churn_risk").cast("double").alias("churn_risk"),
-        *ml.feature_columns(feats),
+        *ml.feature_columns(),
     )
     transformed = model.transform(prepped)
     logit_udf_side = {

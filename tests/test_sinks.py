@@ -92,6 +92,16 @@ def test_delta_scan_parquet_fallback_and_error(spark, tmp_path):
         batch_src.delta_scan(spark, str(tmp_path / "missing")).count()
 
 
+def test_delta_scan_does_not_fall_back_when_delta_is_present(spark, tmp_path, monkeypatch):
+    # with Delta on the classpath a plain parquet directory is not a Delta
+    # table: reading it as parquet would bypass the transaction log
+    p = str(tmp_path / "plain")
+    spark.range(4).write.parquet(p)
+    monkeypatch.setattr(batch_src, "delta_available", lambda _spark: True)
+    with pytest.raises(Exception, match="(?i)delta"):
+        batch_src.delta_scan(spark, p).count()
+
+
 def test_await_any_termination_returns_on_timeout(spark, tmp_path):
     spark.streams.resetTerminated()
     stream = rate_topic_stream(spark, rows_per_second=10)

@@ -3,6 +3,7 @@ Trigger.AvailableNow + memory/parquet sinks, watermarked dedup semantics,
 windowed aggregation, foreachBatch dual sink, checkpoint restart."""
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,17 +24,43 @@ def _drain(query):
     query.awaitTermination(120)
 
 
-def test_silver_stream_matches_batch(spark, feed_dir):
-    stream = pipelines.silver_stream(spark, "transactions", feed_dir)
+@pytest.mark.parametrize("entity", list(pipelines.SILVER_PIPELINES))
+def test_silver_stream_matches_batch(spark, feed_dir, entity):
+    stream = pipelines.silver_stream(spark, entity, feed_dir)
     assert stream.isStreaming
-    q = memory_sink(stream, "tx_stream")
+    q = memory_sink(stream, f"{entity}_stream")
     _drain(q)
-    streamed = spark.sql("SELECT count(*) AS n FROM tx_stream").collect()[0]["n"]
+    streamed = spark.sql(f"SELECT count(*) AS n FROM {entity}_stream").collect()[0]["n"]
 
     from realtimechurnpredictiondataengineering_spark.plans.silver import silver_tables
 
-    batch = silver_tables(spark, n_per_topic=300)["transactions"].count()
+    batch = silver_tables(spark, n_per_topic=300)[entity].count()
     assert streamed == batch > 0
+
+
+def _dedup_operators(df):
+    """(operator, key names) of every dedup node in the analyzed plan."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return [
+        (op, [k.split("#")[0] for k in keys.split(", ")])
+        for op, keys in re.findall(r"(Deduplicate(?:WithinWatermark)?) \[([^\]]*)\]", plan)
+    ]
+
+
+@pytest.mark.parametrize("entity", list(pipelines.SILVER_PIPELINES))
+def test_silver_stream_has_one_dedup_on_table_keys(spark, feed_dir, entity):
+    keys = list(pipelines.SILVER_PIPELINES[entity].keys)
+    stream = pipelines.silver_stream(spark, entity, feed_dir)
+    assert _dedup_operators(stream) == [("Deduplicate", keys)]
+
+
+@pytest.mark.parametrize("entity", ["usage", "transactions"])
+def test_watermarked_silver_stream_replaces_unbounded_dedup(spark, feed_dir, entity):
+    # the watermarked dedup is the only dedup, keyed on the entity's own
+    # keys — not stacked on an unbounded one, not narrowed to one *_id
+    keys = list(pipelines.SILVER_PIPELINES[entity].keys)
+    stream = pipelines.silver_stream(spark, entity, feed_dir, dedup_event_time="event_time")
+    assert _dedup_operators(stream) == [("DeduplicateWithinWatermark", keys)]
 
 
 def test_watermarked_dedup_bounds_state_and_dedups(spark, tmp_path):

@@ -32,6 +32,7 @@ from realtimechurnpredictiondataengineering_spark.operators import dedup, joins,
 from realtimechurnpredictiondataengineering_spark.operators import urls as urlops
 from realtimechurnpredictiondataengineering_spark.operators.partitioning import stage_hot_table
 from realtimechurnpredictiondataengineering_spark.plans.gold import DEFAULT_AS_OF, churn_features
+from realtimechurnpredictiondataengineering_spark.session import stream_session
 from realtimechurnpredictiondataengineering_spark.sources.batch import delta_scan, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -3667,7 +3668,11 @@ def ll17(spark, sf_dir):
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     feed = f"{base}/feed"
     media.write.parquet(feed)
-    stream = spark.readStream.schema(media.schema).parquet(feed)
+    # stateful streaming (dropDuplicatesWithinWatermark): the stream
+    # session pins the state width to cores — AQE never coalesces
+    # streaming state, so the 3× batch width is pure per-partition
+    # state-store overhead (session.stream_state_partitions)
+    stream = stream_session(spark).readStream.schema(media.schema).parquet(feed)
     docs = warc.warc_text_records(stream)
     out = (
         docs.select(
@@ -3682,15 +3687,7 @@ def ll17(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["fingerprint"])
         .drop("ts")
     )
-    # stateful streaming (dropDuplicatesWithinWatermark): pin the state
-    # width to cores — AQE never coalesces streaming state, so the 3×
-    # batch width is pure per-partition state-store overhead
-    # (session.stream_state_partitions)
-    from realtimechurnpredictiondataengineering_spark.session import scoped_stream_width
-
-    with scoped_stream_width(spark):
-        q = delta_stream_sink(out, f"{base}/out", f"{base}/ck")
-        q.awaitTermination()
+    delta_stream_sink(out, f"{base}/out", f"{base}/ck").awaitTermination()
     return delta_scan(spark, f"{base}/out")
 
 
@@ -9764,7 +9761,10 @@ def ll14(spark, sf_dir):
         F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
     )
     feed_df.write.parquet(feed)
-    stream = spark.readStream.schema(feed_df.schema).parquet(feed)
+    # stateful streaming (watermarked dedup inside the ingest chain):
+    # state width = cores, the ll17 rationale
+    # (session.stream_state_partitions)
+    stream = stream_session(spark).readStream.schema(feed_df.schema).parquet(feed)
     admitted = streaming_corpus_ingest(
         stream,
         corpus_fps,
@@ -9777,14 +9777,7 @@ def ll14(spark, sf_dir):
         "n_bpe_tokens",
         "bpe_text",
     )
-    # stateful streaming (watermarked dedup inside the ingest chain):
-    # state width = cores, the ll17 rationale
-    # (session.stream_state_partitions)
-    from realtimechurnpredictiondataengineering_spark.session import scoped_stream_width
-
-    with scoped_stream_width(spark):
-        q = delta_stream_sink(out, f"{base}/out", f"{base}/ck")
-        q.awaitTermination()
+    delta_stream_sink(out, f"{base}/out", f"{base}/ck").awaitTermination()
     return delta_scan(spark, f"{base}/out")
 
 

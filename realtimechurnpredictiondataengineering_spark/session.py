@@ -7,6 +7,14 @@ This engine instead ships cluster-sane defaults and exposes the same knobs
 coalescing), UTC session timezone (deterministic timestamp semantics and
 DuckDB-oracle parity), Arrow enabled for the pandas boundary (K6).
 
+Streaming state is sized apart from batch work: stateful streaming
+queries are built on ``stream_session(spark)``, a child session whose
+only difference is a shuffle width of ``stream_state_partitions``
+(cores), because AQE never shrinks a streaming query's state partitions
+and the checkpoint pins them at the first batch.  The parent session's
+conf is never changed for a stream, so batch work planned on it
+concurrently keeps its width.
+
 On a real cluster none of the local-mode bits apply: the builder only sets
 ``master`` when none is configured, so ``spark-submit --master yarn/k8s``
 wins.
@@ -15,6 +23,8 @@ wins.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -166,6 +176,7 @@ def get_spark(**kwargs) -> SparkSession:
 def stream_state_partitions(spark: SparkSession) -> int:
     """Partition width for STATEFUL STREAMING queries: the session's
     default parallelism, or ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``.
+    :func:`stream_session` is where the engine applies it.
 
     Batch queries start at ~3× cores and let AQE coalesce post-shuffle
     partitions to the data; streaming state gets NO such correction —
@@ -190,26 +201,43 @@ def stream_state_partitions(spark: SparkSession) -> int:
     return max(spark.sparkContext.defaultParallelism, 1)
 
 
-class scoped_stream_width:
-    """Context manager pinning ``spark.sql.shuffle.partitions`` to
-    :func:`stream_state_partitions` around a streaming query's start +
-    drain, restoring the batch width afterwards.  The conf is read at
-    query start and written into the checkpoint, so the scope must
-    cover ``start()`` through ``awaitTermination()``."""
+_STREAM_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_STREAM_SESSIONS_LOCK = threading.Lock()
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
 
-    def __enter__(self):
-        self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_state_partitions(self.spark))
-        )
-        return self
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The session stateful streaming queries are built on: a child of
+    ``spark`` (``newSession()``, one per parent, reused) whose only
+    difference is ``spark.sql.shuffle.partitions`` =
+    :func:`stream_state_partitions`.
 
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
-        return False
+    A streaming query clones the session of the DataFrame it starts from
+    at ``start()`` and its offset log pins the width at batch 0, so the
+    parent's conf is never touched — batch work planned concurrently on
+    the parent (the Gold loop beside the Silver streams) keeps its 3×
+    width — and a checkpoint created at another width keeps running at
+    that width.  ``newSession()`` drops runtime-set conf (a timezone set
+    on the parent at runtime is back at the SparkContext's value in the
+    child, and Silver's ``from_json`` timestamp parsing depends on it),
+    so every call brings the child's conf level with the parent's,
+    setting only the keys that differ.
+
+    The child has its own temp views and ``spark.streams`` manager:
+    memory-sink views of queries started here are not visible through
+    the parent, and the parent's ``streams`` does not list them."""
+    width = str(stream_state_partitions(spark))
+    with _STREAM_SESSIONS_LOCK:
+        child = _STREAM_SESSIONS.get(spark)
+        if child is None:
+            child = _STREAM_SESSIONS[spark] = spark.newSession()
+        want = {**spark.conf.getAll, "spark.sql.shuffle.partitions": width}
+        have = child.conf.getAll
+        for key, value in want.items():
+            if have.get(key) != value:
+                child.conf.set(key, value)
+        for key in have.keys() - want.keys():
+            child.conf.unset(key)
+    return child
 
 
 def tune_runtime(spark: SparkSession) -> None:

@@ -28,6 +28,7 @@ from realtimechurnpredictiondataengineering_spark.operators.filters import (
     SILVER_PIPELINES,
     silver_frame,
 )
+from realtimechurnpredictiondataengineering_spark.session import stream_session
 from realtimechurnpredictiondataengineering_spark.sources.sinks import foreach_batch_dual_sink
 from realtimechurnpredictiondataengineering_spark.sources.streaming import json_topic_stream
 
@@ -57,10 +58,18 @@ def run_silver_dual_sink(
     """One streaming query, two sinks (parquet 'Delta' table + keyed-JSON
     'Kafka' shape written as parquet) via foreachBatch — the fixed
     1-consumer shape of Silver1.py:45-52/133-137 (SURVEY §3.2).  The wire
-    key is the entity's first dedup key."""
+    key is the entity's first dedup key.
+
+    The query runs on ``session.stream_session(spark)``, so its dedup
+    state has ``stream_state_partitions`` partitions (cores) instead of
+    the batch width (3× cores): every state partition is a state-store
+    task with its own delta file and one parquet file per sink per
+    micro-batch.  ``spark``'s own conf is not changed.  A checkpoint
+    created at another width keeps that width (the offset log pins it
+    at batch 0)."""
     from realtimechurnpredictiondataengineering_spark.sources.sinks import keyed_json
 
-    cleaned = silver_stream(spark, entity, source_path)
+    cleaned = silver_stream(stream_session(spark), entity, source_path)
     key_col = SILVER_PIPELINES[entity].keys[0]
 
     def table_sink(batch_df: DataFrame, batch_id: int) -> None:

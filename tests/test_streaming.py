@@ -4,10 +4,13 @@ windowed aggregation, foreachBatch dual sink, checkpoint restart."""
 
 import json
 import re
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from realtimechurnpredictiondataengineering_spark.session import stream_session, stream_state_partitions
 from realtimechurnpredictiondataengineering_spark.sources.generator import TOPICS, synthetic_topic_feed
 from realtimechurnpredictiondataengineering_spark.sources.sinks import memory_sink
 from realtimechurnpredictiondataengineering_spark.streaming import pipelines
@@ -132,8 +135,13 @@ def test_tumbling_counts_watermarked(spark, tmp_path):
 def test_foreach_batch_dual_sink_writes_both(spark, feed_dir, tmp_path):
     out = str(tmp_path / "silver")
     ckpt = str(tmp_path / "ckpt")
+    width = spark.conf.get("spark.sql.shuffle.partitions")
     q = pipelines.run_silver_dual_sink(spark, "profiles", feed_dir, out, ckpt)
     _drain(q)
+    # dedup state at core width, without touching the caller's session
+    state = q.lastProgress["stateOperators"][0]
+    assert state["numShufflePartitions"] == stream_state_partitions(spark)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
     table = spark.read.parquet(f"{out}/table")
     wire = spark.read.parquet(f"{out}/wire")
     assert table.count() == wire.count() > 0
@@ -142,6 +150,58 @@ def test_foreach_batch_dual_sink_writes_both(spark, feed_dir, tmp_path):
     q2 = pipelines.run_silver_dual_sink(spark, "profiles", feed_dir, out, ckpt)
     _drain(q2)
     assert spark.read.parquet(f"{out}/table").count() == table.count()
+
+
+def test_stream_session_follows_parent_conf_except_width(spark):
+    tz, width = "spark.sql.session.timeZone", "spark.sql.shuffle.partitions"
+    probe = "spark.graft.test.stream_session_probe"
+    saved_tz, parent_width = spark.conf.get(tz), spark.conf.get(width)
+    try:
+        # newSession() alone drops runtime-set conf such as the timezone
+        spark.conf.set(tz, "America/New_York")
+        spark.conf.set(probe, "on")
+        child = stream_session(spark)
+        assert child is not spark
+        assert child.conf.get(tz) == "America/New_York"
+        assert child.conf.get(probe) == "on"
+        assert child.conf.get(width) == str(stream_state_partitions(spark))
+        assert spark.conf.get(width) == parent_width
+        # one child per parent, brought level with parent changes
+        spark.conf.set(tz, "Asia/Tokyo")
+        spark.conf.unset(probe)
+        assert stream_session(spark) is child
+        assert child.conf.get(tz) == "Asia/Tokyo"
+        assert child.conf.get(probe, None) is None
+        assert child.conf.get(width) == str(stream_state_partitions(spark))
+    finally:
+        spark.conf.set(tz, saved_tz)
+        spark.conf.unset(probe)
+    assert stream_session(spark).conf.get(tz) == saved_tz
+
+
+def test_stream_session_is_one_child_under_concurrent_callers(spark):
+    parent = spark.newSession()  # no child yet: every thread races to create it
+    children, errors = [], []
+
+    def call():
+        try:
+            children.append(stream_session(parent))
+        except Exception as exc:  # re-raised by the assertion below
+            errors.append(exc)
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=call) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(children) == 8 and len({id(c) for c in children}) == 1
 
 
 def test_stream_static_enrich(spark, feed_dir, sf_dir):

@@ -5,15 +5,15 @@ of the SAME query plan (a tokenize scan reused by counts + scoring, an
 LSH index reused by bands, a top-V cut reused by join + tail mass).
 ``DataFrame.persist`` has no scope: once the query is collected the
 cache sits in executor memory until the session dies.  Harmless for a
-one-shot job, but a long-lived session running many queries (the bench
-loop, a notebook, a query service) accumulates dead caches until
+one-shot job, but a long-lived session running many queries (the oracle
+harness loop, a notebook, a query service) accumulates dead caches until
 eviction pressure hurts real workloads.
 
 ``persist_tracked`` is a drop-in ``persist()`` that records the frame in
 a session-wide weak registry; ``release_caches()`` unpersists everything
-still tracked — call it between queries (bench.py and
-tests/oracle_harness.py do).  Weak references keep the registry from
-pinning frames the caller has already dropped.
+still tracked — call it between queries (tests/oracle_harness.py
+does).  Weak references keep the registry from pinning frames the
+caller has already dropped.
 """
 
 from __future__ import annotations

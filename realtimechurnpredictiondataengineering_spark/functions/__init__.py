@@ -1,7 +1,7 @@
 """Column-expression library.
 
-- ``scalar``  : SURVEY §2.3 P4-P15 (casts, date math, pseudo-score, ARPU,
-                keyed JSON, interval cutoffs)
+- ``scalar``  : SURVEY §2.3 P5-P12 (date cast and math, rounding,
+                pseudo-score, ARPU)
 - ``text``    : north-star text analysis (tokenize, language-ID, quality
                 score, token counts, fingerprints, shingles)
 - ``vectors`` : north-star embedding math (dot/norm/cosine, hyperplane

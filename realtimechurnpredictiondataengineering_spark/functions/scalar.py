@@ -1,4 +1,4 @@
-"""Scalar column expressions (SURVEY §2.3 P4-P15).
+"""Scalar column expressions (SURVEY §2.3 P5-P12).
 
 The reference computes these inline in its Gold/Silver jobs
 (Gold1.py:52-106, Silver1.py:37); here each is a named, reusable,
@@ -19,19 +19,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_string(col: Column | str) -> Column:
-    """P4 — explicit string cast (Gold1.py:52-58)."""
-    return F.col(col).cast("string") if isinstance(col, str) else col.cast("string")
-
-
 def to_date_col(col: Column | str) -> Column:
     """P5 — string→date (Silver1.py:37)."""
     return F.to_date(col)
-
-
-def to_timestamp_col(col: Column | str) -> Column:
-    """P6 — string→timestamp (Gold1.py:26,33,40,47)."""
-    return F.to_timestamp(col)
 
 
 def days_since(ts_col: Column | str, as_of: Column) -> Column:
@@ -40,12 +30,6 @@ def days_since(ts_col: Column | str, as_of: Column) -> Column:
     ``as_of`` is explicit for determinism; pass ``F.current_timestamp()``
     for live semantics."""
     return F.datediff(as_of, ts_col)
-
-
-def interval_cutoff(as_of: Column, minutes: int) -> Column:
-    """P9 — interval arithmetic cutoff (Gold1.py:20
-    ``current_timestamp() - INTERVAL 5 MINUTES``)."""
-    return as_of - F.expr(f"INTERVAL {int(minutes)} MINUTES")
 
 
 def round2(col: Column) -> Column:
@@ -106,8 +90,3 @@ def arpu(revenue: Column, sessions: Column) -> Column:
     ``portable_round2``: the quotient is exactly the shape that lands
     on cross-engine half-ulp boundaries at scale."""
     return portable_round2(revenue / (sessions + F.lit(1)))
-
-
-def row_json(*cols: str) -> Column:
-    """P13 — struct→JSON serialization (Silver1.py:46, Gold1.py:117)."""
-    return F.to_json(F.struct(*[F.col(c) for c in cols]))

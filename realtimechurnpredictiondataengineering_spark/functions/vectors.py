@@ -51,11 +51,6 @@ def _sql_doubles(values) -> str:
     return repr(v) + "D"
 
 
-def lit_vector(values: list[float]) -> Column:
-    """A literal query vector as an array<double> column."""
-    return F.expr(_sql_doubles(list(values)))
-
-
 def lit_matrix(rows: list[list[float]]) -> Column:
     """A literal matrix as ONE nested array<array<double>> literal — a
     single expression parsed JVM-side regardless of size (see

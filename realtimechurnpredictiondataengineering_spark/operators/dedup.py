@@ -46,12 +46,6 @@ from realtimechurnpredictiondataengineering_spark.operators.partitioning import 
 # --------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """F8 generalized — drop exact duplicate rows (optionally by key).
-    Plans as a hash aggregate on the key columns (one shuffle)."""
-    return df.dropDuplicates(subset) if subset else df.dropDuplicates()
-
-
 def content_hash_dedup(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

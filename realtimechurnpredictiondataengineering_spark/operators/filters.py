@@ -218,25 +218,6 @@ def silver_frame(
     return silver_dedup(rows, entity, deterministic, dedup_event_time)
 
 
-def _validate(entity: str, df: DataFrame) -> DataFrame:
-    return silver_dedup(SILVER_PIPELINES[entity].rows(df), entity)
-
-
-def validate_profiles(df: DataFrame) -> DataFrame:
-    """Silver profile cleaning + key dedup (Silver1.py:37-43)."""
-    return _validate("profiles", df)
-
-
-def validate_usage(df: DataFrame) -> DataFrame:
-    """Silver app-usage cleaning + dedup (Silver1.py:65-67)."""
-    return _validate("usage", df)
-
-
-def validate_transactions(df: DataFrame) -> DataFrame:
-    """Silver transaction cleaning + dedup (Silver1.py:89-91)."""
-    return _validate("transactions", df)
-
-
 def validate_tickets(df: DataFrame) -> DataFrame:
     """Silver ticket cleaning (Silver1.py:118-120).  The capitalized
     status domain vs the producer's lower-case emission (Bronze1.py:62)

@@ -3,7 +3,7 @@
 Media travel as opaque ``binary`` columns with a typed metadata struct —
 the parquet-native representation that scales: payload bytes stay
 columnar/compressed, metadata is filterable/prunable without touching
-bytes.  Per-item compute (decode, feature-extract, resize, frame-sample)
+bytes.  Per-item compute (decode, feature-extract, frame-sample)
 runs in Arrow-batched ``mapInPandas`` kernels so Python cost is amortized
 per batch, and the batch never exceeds
 ``spark.sql.execution.arrow.maxRecordsPerBatch``.
@@ -24,23 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("kind", T.StringType()),  # image|audio|video
-                    T.StructField("format", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURES_SCHEMA = T.StructType(
     [
@@ -1573,23 +1556,6 @@ def extract_media_features(media: DataFrame, batch_hint: int | None = None) -> D
 
     return media.mapInPandas(kernel, schema=FEATURES_SCHEMA)
 
-
-def resize_media(media: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Resize kernel: same plumbing, payload-in/payload-out.  The pixel
-    resample is STUBBED (payload passthrough + updated meta); swap the
-    inner lambda for a real resampler on a cluster."""
-    out_schema = MEDIA_SCHEMA
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # STUB: real impl decodes, resamples to <= max_dim, re-encodes.
-            pdf = pdf.copy()
-            pdf["meta"] = pdf["meta"].map(
-                lambda m: {"kind": m["kind"], "format": f"resized<= {max_dim}", "n_bytes": m["n_bytes"]}
-            )
-            yield pdf
-
-    return media.mapInPandas(kernel, schema=out_schema)
 
 
 def sample_video_frames(media: DataFrame, every_n: int = 30) -> DataFrame:

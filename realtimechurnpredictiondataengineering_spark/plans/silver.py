@@ -2,21 +2,23 @@
 
 The per-entity wiring lives in ``operators.filters.SILVER_PIPELINES``
 (read verbatim by the streaming pipelines in ``streaming.pipelines``);
-this module runs it over the synthetic generator feed so the full
-Bronze→Silver path is runnable — and oracle-comparable — as a batch job.
+this module runs it over a Bronze feed frame so the full Bronze→Silver
+path is runnable — and oracle-comparable — as a batch job.  Streaming
+parity tests pass ``synthetic_topic_feed(spark, n)``; the sv01-sv04
+oracle entries read the committed ``FEED_FIXTURE`` parquet so DuckDB
+sees the same bytes.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from realtimechurnpredictiondataengineering_spark.operators.filters import (
     SILVER_PIPELINES,
     silver_frame,
 )
-from realtimechurnpredictiondataengineering_spark.sources.generator import synthetic_topic_feed
 
 
 FEED_FIXTURE = os.path.join(
@@ -37,9 +39,3 @@ def silver_tables_from_feed(feed: DataFrame, deterministic: bool = False) -> dic
     against the materialized fixture."""
     return {e: silver_frame(feed, e, deterministic=deterministic) for e in SILVER_PIPELINES}
 
-
-def silver_tables(spark: SparkSession, n_per_topic: int = 1000, seed: str = "42") -> dict[str, DataFrame]:
-    """Generator-fed variant of ``silver_tables_from_feed`` (streaming
-    parity tests); the sv01-sv04 oracle entries read the committed
-    ``FEED_FIXTURE`` parquet instead so DuckDB sees the same bytes."""
-    return silver_tables_from_feed(synthetic_topic_feed(spark, n_per_topic, seed))

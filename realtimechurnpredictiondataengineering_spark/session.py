@@ -117,18 +117,31 @@ def _local_driver_memory() -> str:
     ``java.lang.OutOfMemoryError: Java heap space`` near suite end
     (round-14 run: cc09/cc10 lost to the context shutdown), while the
     same suite under a right-sized heap runs clean (optimization guide
-    §5: size memory to the workload, not the default).  Overridable via
-    ``SPARK_GRAFT_DRIVER_MEM``; never applied when the deployment
-    configures the driver itself (`_driver_memory_configured`)."""
-    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-    if override:
-        return override
+    §5: size memory to the workload, not the default).  Never applied
+    when the deployment sizes the driver itself (``spark.driver.memory``
+    or ``SPARK_DRIVER_MEMORY``, see `_driver_memory_configured`)."""
     try:
         total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     except (ValueError, OSError):  # pragma: no cover - non-POSIX fallback
         total = 8 * 1024**3
     gib = max(2, min(16, int(total / 4 / 1024**3)))
     return f"{gib}g"
+
+
+def _local_cpus() -> int:
+    """Cores of a self-launched local session: ``SPARK_GRAFT_CPUS`` when
+    set to a positive integer, the machine's count when unset or empty.
+    Any other value raises rather than guessing."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if not raw:
+        return os.cpu_count() or 4
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
 
 
 def session_builder(
@@ -139,8 +152,8 @@ def session_builder(
 ) -> SparkSession.Builder:
     """Return a configured builder; caller may still override anything."""
     builder = SparkSession.builder.appName(app_name)
+    cpus = _local_cpus()
     if master is None and not _master_configured():
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
@@ -156,7 +169,6 @@ def session_builder(
     # coalescing shrink; on a cluster this should be ~2-3x total cores and
     # is expected to be overridden by the deployment.
     if shuffle_partitions is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
         shuffle_partitions = 3 * cpus
     conf["spark.sql.shuffle.partitions"] = str(max(shuffle_partitions, 4))
     if extra_conf:
@@ -175,8 +187,8 @@ def get_spark(**kwargs) -> SparkSession:
 
 def stream_state_partitions(spark: SparkSession) -> int:
     """Partition width for STATEFUL STREAMING queries: the session's
-    default parallelism, or ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``.
-    :func:`stream_session` is where the engine applies it.
+    default parallelism (cores).  :func:`stream_session` is where the
+    engine applies it.
 
     Batch queries start at ~3× cores and let AQE coalesce post-shuffle
     partitions to the data; streaming state gets NO such correction —
@@ -187,17 +199,7 @@ def stream_state_partitions(spark: SparkSession) -> int:
     micro-batch: measured on ll17_streaming_warc_ingest at sf0.1, 96
     state partitions ran 6-16 s where 8 ran 3.1 s, the cost scaling
     with the partition count, not the data.  Cores (= what can run
-    concurrently) is the right default at every scale; deployments
-    with state too large per core override via the env knob."""
-    override = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if override:
-        try:
-            return max(int(override), 1)
-        except ValueError as exc:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-                f"got {override!r}"
-            ) from exc
+    concurrently) is the width at every scale."""
     return max(spark.sparkContext.defaultParallelism, 1)
 
 

@@ -151,16 +151,6 @@ def delta_batch_append(df: DataFrame, path: str) -> None:
         df.write.mode("append").parquet(path)
 
 
-def partitioned_append(
-    df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet"
-) -> None:
-    """Hive-style partitioned append — the warehouse layout that makes
-    partition pruning work: a reader filtering on a partition column
-    touches only matching directories (``PartitionFilters`` in the scan),
-    which at 100 TB is the difference between scanning a day and scanning
-    the archive."""
-    df.write.mode("append").partitionBy(*partition_cols).format(fmt).save(path)
-
 
 def kafka_batch_write(
     df: DataFrame, key_col: str, topic: str, brokers: str = "localhost:9092"

@@ -1,5 +1,5 @@
 """Structured Streaming pipelines (SURVEY §2.8 ST1-ST6) + the
-``applyInPandasWithState`` custom-stateful extension point."""
+``transformWithStateInPandas`` custom-stateful extension point."""
 
 from realtimechurnpredictiondataengineering_spark.streaming import pipelines, stateful  # noqa: F401
 

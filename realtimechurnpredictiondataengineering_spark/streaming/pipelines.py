@@ -103,22 +103,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """ST5 — sliding-window variant."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), F.col("w.end").alias("window_end"), "n")
-    )
-
-
 def session_windows(
     events: DataFrame,
     ts_col: str = "ts",
@@ -138,12 +122,6 @@ def session_windows(
             "n_events",
         )
     )
-
-
-def stream_static_enrich(stream_df: DataFrame, dim: DataFrame, on, how: str = "left") -> DataFrame:
-    """ST6 — stream-static join: each micro-batch joins against the
-    (broadcastable) static dimension; no streaming state required."""
-    return stream_df.join(F.broadcast(dim), on=on, how=how)
 
 
 def rollup_stream(
@@ -189,92 +167,6 @@ def read_rollup(
     from realtimechurnpredictiondataengineering_spark.operators import rollup
 
     return rollup.rollup_merge(spark.read.parquet(partials_dir), keys, grain)
-
-
-def streaming_session_rollup(
-    events_stream: DataFrame,
-    partials_dir: str,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> StreamingQuery:
-    """The streaming twin of the w09 batch composition (sessionize →
-    daily rollup): watermarked ``session_window`` sessions close in
-    append mode, and every micro-batch of CLOSED sessions appends its
-    own daily partials — the same no-read-modify-write partials design
-    as ``rollup_stream``, so there is no second stateful operator and
-    no state growth beyond the session store the watermark already
-    bounds.  ``read_session_rollup`` re-merges at query time; because a
-    closed session is emitted exactly once and every aggregate is
-    decomposable, the merged view EQUALS the batch w09 result on the
-    same events (parity-tested).
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.groupBy(F.date_trunc("day", "session_start").alias("bucket"))
-            .agg(
-                F.count("*").alias("n_sessions"),
-                F.sum("n_events").alias("total_events"),
-                F.min("n_events").alias("min_session_events"),
-                F.max("n_events").alias("max_session_events"),
-            )
-            .write.mode("append")
-            .parquet(partials_dir)
-        )
-
-    sessions = session_windows(
-        events_stream, ts_col=ts_col, gap=gap, key=key, watermark=watermark
-    )
-    return (
-        sessions.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_session_rollup(spark: SparkSession, partials_dir: str) -> DataFrame:
-    """Merged daily session rollup over streamed partials — the same
-    decomposable re-aggregation as ``read_rollup``."""
-    return (
-        spark.read.parquet(partials_dir)
-        .groupBy("bucket")
-        .agg(
-            F.sum("n_sessions").alias("n_sessions"),
-            F.sum("total_events").alias("total_events"),
-            F.min("min_session_events").alias("min_session_events"),
-            F.max("max_session_events").alias("max_session_events"),
-        )
-    )
-
-
-def compact_rollup(
-    spark: SparkSession,
-    partials_dir: str,
-    keys: tuple[str, ...] = ("event_type",),
-) -> int:
-    """Fold accumulated per-batch partials into one row per (bucket, key)
-    — readers are unchanged (``read_rollup`` merges either layout), this
-    just caps the file count and re-merge cost after many micro-batches.
-    Staged rewrite: write the folded rows to a sibling dir, then swap —
-    Spark cannot overwrite a parquet path a live plan is reading.
-    Returns the compacted row count."""
-    from realtimechurnpredictiondataengineering_spark.operators import rollup
-
-    staged = partials_dir.rstrip("/") + ".compacting"
-    folded = rollup.rollup_merge(spark.read.parquet(partials_dir), keys, "hour")
-    folded.write.mode("overwrite").parquet(staged)
-    import shutil
-
-    shutil.rmtree(partials_dir)
-    shutil.move(staged, partials_dir)
-    return spark.read.parquet(partials_dir).count()
 
 
 def streaming_incremental_dedup(
@@ -363,52 +255,6 @@ def streaming_corpus_ingest(
     if segmentation_merges is None:
         return admitted
     return bpe_segment_frame(admitted, segmentation_merges, text_col, end_of_word)
-
-
-def streaming_hybrid_ingest(
-    docs_stream: DataFrame,
-    corpus_fingerprints: DataFrame,
-    corpus_vectors: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """The streaming twin of ``plans.corpus_prep.hybrid_dedup_pipeline``
-    (ll08): a crawl feed carrying (id, text, ts, embedding) is admitted
-    to the corpus only if it clears the Gopher gates, is lexically new,
-    AND is semantically new — the FineWeb/Dolma ingest path run
-    incrementally instead of as a batch rebuild.
-
-    Stage order is the cost order: the stateless quality gates prune
-    first; the LEXICAL reject (8-byte fingerprint anti-join vs the
-    accepted corpus + watermarked within-stream dedup,
-    ``streaming_corpus_ingest``) runs before the SEMANTIC reject
-    (stream-static LEFT ANTI keyed on the scan-local cluster id with
-    the cosine threshold as residual, ``streaming_semantic_dedup``)
-    because comparing fingerprints is cheaper than comparing vectors —
-    a verbatim mirror never reaches the vector stage.  State stays
-    bounded: the lexical stage by the watermark horizon, the semantic
-    stage by being stateless.  Within-stream SEMANTIC duplicates and
-    cross-graph cluster fusion remain the batch ll08 job's concern over
-    the accepted snapshot, exactly as ``streaming_incremental_dedup``
-    defers near-dup to batch.  Returns the admitted streaming rows
-    (original columns).
-    """
-    lexical = streaming_corpus_ingest(
-        docs_stream, corpus_fingerprints, id_col, text_col, ts_col, watermark
-    )
-    return streaming_semantic_dedup(
-        lexical,
-        corpus_vectors,
-        centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-    )
 
 
 def streaming_merge_upserts(

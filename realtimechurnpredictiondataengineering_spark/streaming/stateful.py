@@ -1,79 +1,23 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``
+"""Custom stateful streaming operators via ``transformWithStateInPandas``
 (SURVEY §2.8/§2.9 extension point).
 
 Spark's built-in stateful ops (windowed agg, stream dedup, stream-stream
 join) cover the reference's needs; this module is the sanctioned escape
-hatch for semantics they can't express — here, a per-key running profile
-(event count, value sum, last-seen timestamp) maintained across
-micro-batches with a processing-time timeout that expires idle keys so
-state stays bounded (the discipline the reference's unwatermarked
-``dropDuplicates`` lacks, Silver1.py:41).
+hatch for semantics they can't express — here, per-key deviation flags
+over a bounded history of each key's prior values.
 
 State is per-key and Arrow-batched: each micro-batch routes a key's rows
-to one task, the handler folds them into the (count, total, last_ts)
-tuple, and GroupStateTimeout reclaims idle keys — O(active keys) state,
-which is what survives an unbounded stream.
+to one task, the handler folds them into the key's ``ListState``, and a
+per-state TTL expires idle keys — O(active keys) state, which is what
+survives an unbounded stream (the discipline the reference's
+unwatermarked ``dropDuplicates`` lacks, Silver1.py:41).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-_STATE_SCHEMA = "n_events long, total_value double, last_ts timestamp"
-
-
-def running_profile(
-    keyed: DataFrame,
-    key_col: str = "key",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    idle_timeout_ms: int = 3_600_000,
-    key_type: str = "string",
-) -> DataFrame:
-    """Per-key running (count, sum, last-seen) over an unbounded keyed
-    stream.  Emits the updated profile row for every key seen in a
-    micro-batch; keys idle past ``idle_timeout_ms`` are dropped from
-    state (emitting nothing) rather than accumulating forever.  The
-    output keeps the caller's key column name and type (``key_type``
-    must match the grouping column's Spark type, or the Arrow conversion
-    rejects the handler's output batch)."""
-    output_schema = (
-        f"{key_col} {key_type}, n_events long, total_value double, last_ts timestamp"
-    )
-
-    def handler(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, total, last_ts = state.get if state.exists else (0, 0.0, None)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-            batch_max = pdf[ts_col].max()
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-        state.update((n, total, last_ts))
-        state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {key_col: [key[0]], "n_events": [n], "total_value": [total], "last_ts": [last_ts]}
-        )
-
-    return keyed.groupBy(key_col).applyInPandasWithState(
-        handler,
-        outputStructType=output_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
 
 
 def deviation_flags(

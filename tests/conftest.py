@@ -12,14 +12,14 @@ def spark():
 
     # One session serves the whole suite (350+ tests, 7000+ stages), and
     # Spark's default 1g driver heap accumulates listener/UI state until
-    # a mid-suite OOM — round 12 hit it reproducibly at ~60% of the run
-    # (the failing allocation was a tiny analysis-time builder: the heap
-    # was simply full).  8g on a 128 GiB box; test-fixture-only so bench
-    # numbers stay comparable to their gates.
+    # a mid-suite OOM (round 12 hit it at ~60% of the run).  The session
+    # sizes its own heap from RAM (``session._local_driver_memory``); a
+    # fixed pin sized for a 128 GiB box starves a small one, where the
+    # same process also hosts the DuckDB oracle.
     spark = get_spark(
         app_name="realtimechurnprediction-tests",
         shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g", "spark.ui.enabled": "false"},
+        extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     # the engine caps plan strings for UI events (session.ENGINE_CONF);

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 import sys
 
 import duckdb
@@ -83,20 +84,38 @@ def compare_fetched(spark_cols, spark_rows, duck_cols, duck_rows) -> tuple[bool,
     return True, f"match: {len(spark_rows)} rows"
 
 
+def _duckdb_config() -> dict:
+    """DuckDB runs in the same process and on the same box as the Spark
+    driver JVM, so it is bounded instead of taking its defaults (80 % of
+    RAM, all hardware threads, spill into ``.tmp/`` under the working
+    directory): a quarter of RAM (the driver heap's own share, see
+    ``session._local_driver_memory``), one thread per usable core, and
+    no spill.  A twin over the limit fails with DuckDB's out-of-memory
+    error.  Spill stays off because its cap (``max_temp_directory_size``)
+    is not enforced by the DuckDB in use, and the t19 twin, let spill,
+    filled 20 GB of free disk in 25 s at sf0.001."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return {
+        "memory_limit": f"{max(1024, ram // 4 // 1024**2)}MiB",
+        "threads": len(os.sched_getaffinity(0)),
+        "temp_directory": "",
+    }
+
+
 def run_all(spark, sf_dir: str, names=None) -> dict[str, tuple[bool, str]]:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    results = {}
     from realtimechurnpredictiondataengineering_spark.cache import release_caches
 
-    for name in names or REGISTRY:
-        try:
-            results[name] = compare_query(spark, con, name, sf_dir)
-        except Exception as exc:  # noqa: BLE001 - harness reports, not raises
-            results[name] = (False, f"EXCEPTION: {type(exc).__name__}: {exc}")
-        finally:
-            release_caches()  # query-private caches die with their query
+    results = {}
+    with duckdb.connect(config=_duckdb_config()) as con:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+        for name in names or REGISTRY:
+            try:
+                results[name] = compare_query(spark, con, name, sf_dir)
+            except Exception as exc:  # noqa: BLE001 - harness reports, not raises
+                results[name] = (False, f"EXCEPTION: {type(exc).__name__}: {exc}")
+            finally:
+                release_caches()  # query-private caches die with their query
     return results
 
 

@@ -54,9 +54,10 @@ def test_generator_is_deterministic(spark):
 
 
 def test_silver_tables_shapes(spark):
-    from realtimechurnpredictiondataengineering_spark.plans.silver import silver_tables
+    from realtimechurnpredictiondataengineering_spark.plans.silver import silver_tables_from_feed
+    from realtimechurnpredictiondataengineering_spark.sources.generator import synthetic_topic_feed
 
-    out = silver_tables(spark, n_per_topic=500)
+    out = silver_tables_from_feed(synthetic_topic_feed(spark, 500))
     assert set(out) == {"profiles", "usage", "transactions", "tickets"}
     assert out["profiles"].count() > 0
     assert out["transactions"].count() > 0

@@ -7,6 +7,11 @@ from pyspark.sql import functions as F
 from realtimechurnpredictiondataengineering_spark.operators import filters
 
 
+def _silver_rows(df, entity):
+    """An entity's Silver row rules then its dedup, on parsed rows."""
+    return filters.silver_dedup(filters.SILVER_PIPELINES[entity].rows(df), entity)
+
+
 def test_demux_routes_by_topic(spark):
     df = spark.createDataFrame(
         [("a", "t1"), ("b", "t2"), ("c", "t1")], "value string, topic string"
@@ -43,7 +48,7 @@ def test_validate_profiles_chain(spark):
         ("1", "alice2", "alice2@x.com", 31, "Female", "NY", "2020-01-01"),
     ]
     df = spark.createDataFrame(rows, filters.PROFILE_SCHEMA)
-    out = filters.validate_profiles(df)
+    out = _silver_rows(df, "profiles")
     assert out.count() == 1
     row = out.collect()[0]
     assert row["customer_id"] == "1"
@@ -64,7 +69,7 @@ def test_validate_usage_null_keyed_dedup(spark):
     # (customer_id, null) collapses to one row per customer (Silver1.py:67).
     rows = [("1", 5, None, None), ("1", 9, None, None), ("2", 3, None, None)]
     df = spark.createDataFrame(rows, filters.USAGE_SCHEMA)
-    assert filters.validate_usage(df).count() == 2
+    assert _silver_rows(df, "usage").count() == 2
 
 
 def test_validate_transactions_positive_value(spark):
@@ -74,7 +79,7 @@ def test_validate_transactions_positive_value(spark):
         ("1", "purchase", None, None),
     ]
     df = spark.createDataFrame(rows, filters.TRANSACTION_SCHEMA)
-    out = filters.validate_transactions(df)
+    out = _silver_rows(df, "transactions")
     assert out.count() == 1
     assert out.collect()[0]["value"] == 10.0
 

@@ -102,13 +102,18 @@ class TestScalar:
         )
         assert out == 30
 
-    def test_interval_cutoff(self, spark):
-        out = _one(
-            spark,
-            scalar.interval_cutoff(F.to_timestamp(F.lit("2024-01-01 00:10:00")), 5),
-            x=1,
-        )
-        assert str(out) == "2024-01-01 00:05:00"
+    def test_interval_cutoff(self, spark, tmp_path):
+        # P9 is inlined in inventory p09: an event survives only when it
+        # is strictly after 2024-01-30 00:00:00 - INTERVAL 5 MINUTES.
+        from realtimechurnpredictiondataengineering_spark.plans.inventory import p09
+
+        spark.createDataFrame(
+            [(1, 1, "2024-01-29 23:54:59"), (2, 1, "2024-01-29 23:55:00"),
+             (3, 2, "2024-01-29 23:55:01")],
+            "event_id long, user_id long, ts_s string",
+        ).select("event_id", "user_id", F.to_timestamp("ts_s").alias("ts")) \
+            .write.parquet(str(tmp_path / "events.parquet"))
+        assert [r["event_id"] for r in p09(spark, str(tmp_path)).collect()] == [3]
 
 
 class TestRepetitionMetrics:

@@ -47,7 +47,6 @@ def test_plan_range_partitions_instead_of_global_window(spark, values):
             assert "_pid" in line or "_part_total" in line
 
 
-@pytest.mark.slow  # randomized fuzz; deterministic twin stays in the default tier
 def test_pack_sequences_fills_budget(spark):
     rows = [(i, "word " * 40) for i in range(50)]  # 40 tokens each
     docs = spark.createDataFrame(rows, "doc_id long, text string")

@@ -66,35 +66,3 @@ def test_rollup_stream_merges_across_batches(spark, tmp_path):
     }
     # two independent batch appends merge to exactly the one-shot answer
     assert merged == direct
-
-
-def test_compact_rollup_preserves_merged_view(spark, tmp_path):
-    from realtimechurnpredictiondataengineering_spark.streaming import pipelines
-
-    src = str(tmp_path / "src")
-    partials = str(tmp_path / "partials")
-    e = _events(spark)
-    # two separate appends -> duplicate (bucket, key) partial rows
-    e.filter(F.col("event_id") <= 2).coalesce(1).write.mode("append").parquet(src)
-    pipelines.rollup_stream(
-        spark.readStream.schema(e.schema).parquet(src), partials, str(tmp_path / "c1")
-    ).awaitTermination(120)
-    e.filter(F.col("event_id") > 2).coalesce(1).write.mode("append").parquet(src)
-    pipelines.rollup_stream(
-        spark.readStream.schema(e.schema).parquet(src), partials, str(tmp_path / "c2")
-    ).awaitTermination(120)
-
-    before = {
-        (str(r["bucket"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in pipelines.read_rollup(spark, partials, "day").collect()
-    }
-    n = pipelines.compact_rollup(spark, partials)
-    after = {
-        (str(r["bucket"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in pipelines.read_rollup(spark, partials, "day").collect()
-    }
-    assert after == before
-    # compaction actually folded: unique (hour, type) rows only
-    hours = spark.read.parquet(partials).groupBy("bucket", "event_type").count().collect()
-    assert all(r["count"] == 1 for r in hours)
-    assert n == len(hours)

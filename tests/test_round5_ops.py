@@ -399,62 +399,6 @@ def test_tf_cosine_pairs_df_cap_drops_boilerplate(spark):
 
 
 # ---------------------------------------------------------------------------
-# streaming session rollup (w09's streaming twin)
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_session_rollup_matches_batch_w09(spark, tmp_path, sf_dir):
-    import time
-
-    from pyspark.sql import functions as F
-
-    from realtimechurnpredictiondataengineering_spark.plans.inventory import REGISTRY
-    from realtimechurnpredictiondataengineering_spark.streaming import pipelines
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "ts", "user_id", "event_id"
-    )
-    src = str(tmp_path / "events_stream")
-    events.coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    # far-future sentinel (batch 2) advances the watermark so append
-    # mode closes and emits every real session
-    spark.createDataFrame(
-        [("2030-01-01 00:00:00", 999_999, 0)], "ts_s string, user_id long, event_id long"
-    ).select(F.to_timestamp("ts_s").alias("ts"), "user_id", "event_id").coalesce(
-        1
-    ).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id long, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    partials = str(tmp_path / "sess_partials")
-    q = pipelines.streaming_session_rollup(
-        stream, partials, str(tmp_path / "ckpt"), watermark="10 minutes"
-    )
-    q.awaitTermination(120)
-
-    got = {
-        str(r["bucket"])[:10]: (
-            r["n_sessions"], r["total_events"],
-            r["min_session_events"], r["max_session_events"],
-        )
-        for r in pipelines.read_session_rollup(spark, partials).collect()
-        if str(r["bucket"])[:10] != "2030-01-01"  # drop the sentinel's bucket
-    }
-    want = {
-        str(r["bucket"]): (
-            r["n_sessions"], r["total_events"],
-            r["min_session_events"], r["max_session_events"],
-        )
-        for r in REGISTRY["w09_session_rollup"][0](spark, sf_dir).collect()
-    }
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
 # expectations_report
 # ---------------------------------------------------------------------------
 

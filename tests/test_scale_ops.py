@@ -1,12 +1,11 @@
-"""Scale-posture operators: salting equivalence + bucketed shuffle-free
-joins, asserted at the plan level (the property that matters at 100 TB).
+"""Scale-posture operators: salting equivalence, stable splits and
+layout, asserted at the plan level (the property that matters at 100 TB).
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from realtimechurnpredictiondataengineering_spark.operators import skew
-from realtimechurnpredictiondataengineering_spark.sources import bucketing
 
 
 @pytest.fixture()
@@ -60,42 +59,6 @@ def test_non_algebraic_aggregate_rejected(spark, skewed_df):
         skew.salted_agg(skewed_df, ["k"], {"d": ("countDistinct", "v")}, "rowid")
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    left = spark.range(500).select(F.col("id").alias("k"), (F.col("id") * 2).alias("lv"))
-    right = spark.range(500).select(F.col("id").alias("k"), (F.col("id") * 3).alias("rv"))
-    bucketing.write_bucketed(left, "b_left", "k", 8, path=str(tmp_path / "l"))
-    bucketing.write_bucketed(right, "b_right", "k", 8, path=str(tmp_path / "r"))
-    # at test size the planner rightly prefers broadcast (and skips the
-    # bucket spec); disable it to expose the co-located big-big join path
-    # that matters when both sides are fact-sized.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketing.bucketed_table(spark, "b_left").join(
-            bucketing.bucketed_table(spark, "b_right"), "k"
-        )
-        assert joined.count() == 500
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # co-located: sort-merge join directly over both bucketed scans —
-        # no shuffle on either side
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_left")
-        spark.sql("DROP TABLE IF EXISTS b_right")
-
-
-def test_bucketed_agg_has_no_exchange(spark, tmp_path):
-    df = spark.range(300).select((F.col("id") % 50).alias("k"), F.col("id").alias("v"))
-    bucketing.write_bucketed(df, "b_agg", "k", 4, path=str(tmp_path / "a"))
-    try:
-        agg = bucketing.bucketed_table(spark, "b_agg").groupBy("k").agg(F.sum("v").alias("s"))
-        assert agg.count() == 50
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_agg")
 
 
 def test_train_test_split_is_stable_and_disjoint(spark):

@@ -112,18 +112,6 @@ def test_await_any_termination_returns_on_timeout(spark, tmp_path):
     q.stop()
 
 
-def test_partitioned_append_prunes_partitions(spark, tmp_path, sf_dir):
-    out = str(tmp_path / "part")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "event_type", "value")
-    sinks.partitioned_append(events, out, ["event_type"])
-    read = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    assert read.count() == events.filter(F.col("event_type") == "click").count() > 0
-    plan = read._jdf.queryExecution().executedPlan().toString()
-    # the filter must land as a partition filter (directory pruning), not
-    # a post-scan data filter
-    assert "PartitionFilters: [isnotnull(event_type" in plan or "PartitionFilters: [" in plan.split("PartitionFilters:")[1][:80]
-    assert "event_type" in plan.split("PartitionFilters:")[1].split("]")[0]
-
 
 def test_read_format_roundtrip_csv_json(spark, tmp_path):
     from realtimechurnpredictiondataengineering_spark.sources import batch as b

@@ -3,7 +3,7 @@
 #   1. unit/streaming/plan tests               (~10 min)
 #   2. full-registry DuckDB oracle parity      (~12 min)
 #   3. driver-shaped window canonicalization   (~4 min)
-#   4. headline bench at sf0.1                 (~3 min)
+#   4. benchmark-of-record self-tests, no Spark (seconds)
 # Usage: tools/check.sh  (from the repo root)
 set -e
 cd "$(dirname "$0")/.."
@@ -16,4 +16,4 @@ python tests/oracle_harness.py /root/testdata/sf0.01
 # value-match its oracles — catches v06/m01/m02-class output-shape
 # failures the tuple-based harness above cannot see.
 python tools/selfcheck_window.py /root/testdata/sf0.01
-python bench.py
+python3 -m pytest medallion_bench/tests -q

@@ -5,7 +5,7 @@ shuffle read, compute, scheduler delay — before touching code.  Local
 mode has no history server, but the live UI's REST endpoint
 (`/api/v1/applications/<id>/stages`) carries per-stage wall time, task
 count, shuffle read/write bytes, and input bytes.  This tool runs each
-named query exactly like bench.py (noop sink, released caches), labels
+named query on a noop sink and releases its caches afterwards, labels
 it with setJobDescription, and prints the stage table for the jobs the
 query ran, newest first, so a 10-second query decomposes into its
 stages without needing the UI.

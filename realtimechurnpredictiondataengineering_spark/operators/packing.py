@@ -6,10 +6,11 @@ needs — a GLOBAL running total of token counts — is exactly the
 operation a naive window (``Window.orderBy`` with no partition key)
 serializes onto one task.  ``global_prefix_sum`` is the scale-correct
 form: a two-phase distributed scan (range-partition on the order key,
-per-partition local cumsum in parallel, then a broadcast of the tiny
-per-partition exclusive offsets).  Wall-clock is two narrow passes over
-the data plus an O(num_partitions) driver-side-free side table — the
-same shape at 32 partitions and at 100k.
+per-partition local cumsum in parallel, materialized once, then a
+broadcast of the tiny per-partition exclusive offsets).  Wall-clock is
+one range exchange, one pass that fills the cache, and two reads of it
+plus an O(partitions) side table — the same shape at 32 partitions and
+at 100k.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from realtimechurnpredictiondataengineering_spark.cache import eager_persist
 from realtimechurnpredictiondataengineering_spark.functions import text as tx
 
 
@@ -25,66 +27,39 @@ def global_prefix_sum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "prefix_sum",
-    num_partitions: int | None = None,
-    arrow_local_scan: bool = False,
 ) -> DataFrame:
     """Inclusive running sum of ``value_col`` over the TOTAL order given
     by ``order_cols`` (must be a unique key for a deterministic result),
     without a single-task global window.
 
-    Phase 1: ``repartitionByRange`` on the order key, local cumsum per
-    partition (parallel).  Phase 2: per-partition totals (one tiny row
-    per partition) get their own exclusive prefix via a window over the
-    partition ids — O(partitions) rows, not O(rows) — and broadcast-join
-    back.  Exact same result as ``Window.orderBy(...)`` with no
-    partition key, minus the scale cliff.
+    Phase 1: ``repartitionByRange`` on the order key at the session's
+    default parallelism, local cumsum per partition (a window keyed by
+    the partition id, in parallel).  Phase 2: per-partition totals (one
+    tiny row per partition) get their own exclusive prefix via a window
+    over the partition ids — O(partitions) rows, not O(rows) — and
+    broadcast-join back.  Exact same result as ``Window.orderBy(...)``
+    with no partition key, minus the scale cliff.
 
-    ``arrow_local_scan`` picks how phase 1's LOCAL cumsum runs.  The
-    default JVM window (``Window.partitionBy(_pid)``) costs one more
-    full-data hash exchange, because Spark cannot see that the range
-    partitioning already clusters ``_pid`` — measured faster on
-    local[32] at bench scale (0.61 s vs 1.01 s, Python-worker overhead
-    dominates small rows).  ``True`` replaces it with an Arrow-batched
-    ``mapInPandas`` running total over ``sortWithinPartitions`` — zero
-    extra exchange, so on a real cluster, where a second network pass
-    over 100 TB costs more than Arrow serialization, it is the right
-    setting.  Both paths produce IDENTICAL values (unit-tested); the
-    knob only moves where the work happens.
+    The local frame is materialized once (``cache.eager_persist``)
+    before both phases read it.  Left lazy, each branch re-runs the
+    range exchange, and its sampled bounds depend on the input's row
+    order, which is not fixed behind a shuffle; the offsets branch also
+    prunes the other columns, so Spark does not reuse the exchange.  The
+    two branches then put rows in different partitions and most sums
+    come out wrong, with the row count still right.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    if arrow_local_scan:
-        from pyspark.sql.types import (
-            ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructType,
-        )
-
-        sorted_ = ranged.sortWithinPartitions(*order_cols)
-        vtype = sorted_.schema[value_col].dataType
-        integral = isinstance(vtype, (ByteType, ShortType, IntegerType, LongType))
-        cum_type = LongType() if integral else DoubleType()
-        out_schema = StructType(list(sorted_.schema.fields)).add("_local_cum", cum_type)
-        np_type = "int64" if integral else "float64"
-
-        def _local_cumsum(batches):
-            # batches stream in sorted order within the partition; the
-            # running total carries across batch boundaries
-            run = 0
-            for b in batches:
-                c = b[value_col].cumsum().astype(np_type) + run
-                if len(c):
-                    run = c.iloc[-1]
-                yield b.assign(_local_cum=c)
-
-        local = sorted_.mapInPandas(_local_cumsum, out_schema)
-    else:
-        local_w = (
-            Window.partitionBy("_pid")
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        local = ranged.withColumn("_local_cum", F.sum(value_col).over(local_w))
+    local_w = (
+        Window.partitionBy("_pid")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = eager_persist(
+        ranged.withColumn("_local_cum", F.sum(value_col).over(local_w))
+    )
     offsets_w = (
         Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     )

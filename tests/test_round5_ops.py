@@ -172,30 +172,6 @@ def test_token_budget_select_ties_break_by_id(spark):
 
 
 # ---------------------------------------------------------------------------
-# global_prefix_sum arrow_local_scan
-# ---------------------------------------------------------------------------
-
-
-def test_global_prefix_sum_arrow_matches_window(spark):
-    from realtimechurnpredictiondataengineering_spark.operators import packing
-
-    rows = [(i, (i * 37) % 11 + 1) for i in range(200)]
-    df = spark.createDataFrame(rows, "k long, v int")
-    jvm = {
-        r["k"]: r["ps"]
-        for r in packing.global_prefix_sum(df, ["k"], "v", out_col="ps").collect()
-    }
-    arrow = {
-        r["k"]: r["ps"]
-        for r in packing.global_prefix_sum(
-            df, ["k"], "v", out_col="ps", arrow_local_scan=True
-        ).collect()
-    }
-    assert arrow == jvm
-    assert jvm[199] == sum(v for _, v in rows)
-
-
-# ---------------------------------------------------------------------------
 # cluster_representatives
 # ---------------------------------------------------------------------------
 

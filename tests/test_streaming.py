@@ -160,27 +160,30 @@ def test_stream_session_follows_parent_conf_except_width(spark):
         # newSession() alone drops runtime-set conf such as the timezone
         spark.conf.set(tz, "America/New_York")
         spark.conf.set(probe, "on")
+        spark.range(3).createOrReplaceTempView("stream_session_probe")
         child = stream_session(spark)
         assert child is not spark
+        assert child.table("stream_session_probe").count() == 3
         assert child.conf.get(tz) == "America/New_York"
         assert child.conf.get(probe) == "on"
         assert child.conf.get(width) == str(stream_state_partitions(spark))
         assert spark.conf.get(width) == parent_width
-        # one child per parent, brought level with parent changes
+        # each call clones the parent as it is now
         spark.conf.set(tz, "Asia/Tokyo")
         spark.conf.unset(probe)
-        assert stream_session(spark) is child
+        child = stream_session(spark)
         assert child.conf.get(tz) == "Asia/Tokyo"
         assert child.conf.get(probe, None) is None
         assert child.conf.get(width) == str(stream_state_partitions(spark))
     finally:
         spark.conf.set(tz, saved_tz)
         spark.conf.unset(probe)
+        spark.catalog.dropTempView("stream_session_probe")
     assert stream_session(spark).conf.get(tz) == saved_tz
 
 
 def test_stream_session_is_one_child_under_concurrent_callers(spark):
-    parent = spark.newSession()  # no child yet: every thread races to create it
+    parent = spark.newSession()
     children, errors = [], []
 
     def call():
@@ -201,7 +204,9 @@ def test_stream_session_is_one_child_under_concurrent_callers(spark):
         sys.setswitchinterval(saved)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    assert len(children) == 8 and len({id(c) for c in children}) == 1
+    assert len(children) == 8
+    want = str(stream_state_partitions(parent))
+    assert all(c.conf.get("spark.sql.shuffle.partitions") == want for c in children)
 
 
 def test_stream_stream_join_time_bounded(spark, tmp_path):

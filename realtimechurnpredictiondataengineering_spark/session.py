@@ -8,8 +8,8 @@ coalescing), UTC session timezone (deterministic timestamp semantics and
 DuckDB-oracle parity), Arrow enabled for the pandas boundary (K6).
 
 Streaming state is sized apart from batch work: stateful streaming
-queries are built on ``stream_session(spark)``, a clone of the session
-whose only difference is a shuffle width of ``stream_state_partitions``
+queries are built on ``stream_session(spark)``, a child session whose
+only difference is a shuffle width of ``stream_state_partitions``
 (cores), because AQE never shrinks a streaming query's state partitions
 and the checkpoint pins them at the first batch.  The parent session's
 conf is never changed for a stream, so batch work planned on it
@@ -23,6 +23,8 @@ wins.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -201,27 +203,47 @@ def stream_state_partitions(spark: SparkSession) -> int:
     return max(spark.sparkContext.defaultParallelism, 1)
 
 
+_STREAM_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_STREAM_SESSIONS_LOCK = threading.Lock()
+
+
 def stream_session(spark: SparkSession) -> SparkSession:
-    """The session stateful streaming queries are built on: a clone of
-    ``spark`` whose only difference is ``spark.sql.shuffle.partitions``
-    = :func:`stream_state_partitions`.
+    """The session stateful streaming queries are built on: a child of
+    ``spark`` (``newSession()``, one per parent, reused) whose only
+    difference is ``spark.sql.shuffle.partitions`` =
+    :func:`stream_state_partitions`.
 
-    ``cloneSession()`` is the same JVM clone a streaming query makes of
-    its DataFrame's session at every ``start()``: it carries the
-    parent's runtime conf (the session timezone that Silver's
-    ``from_json`` timestamp parsing depends on) and its temp views, and
-    later changes on either side do not reach the other.  Each call
-    makes a fresh clone, so it reflects the parent as it is now.  The
-    offset log pins the width at batch 0, so the parent's conf is never
-    touched — batch work planned concurrently on the parent (the Gold
-    loop beside the Silver streams) keeps its 3× width — and a
-    checkpoint created at another width keeps running at that width.
+    A streaming query clones the session of the DataFrame it starts from
+    at ``start()`` and its offset log pins the width at batch 0, so the
+    parent's conf is never touched — batch work planned concurrently on
+    the parent (the Gold loop beside the Silver streams) keeps its 3×
+    width — and a checkpoint created at another width keeps running at
+    that width.  ``newSession()`` drops runtime-set conf (a timezone set
+    on the parent at runtime is back at the SparkContext's value in the
+    child, and Silver's ``from_json`` timestamp parsing depends on it),
+    so every call brings the child's conf level with the parent's,
+    setting only the keys that differ.
 
-    The clone has its own ``spark.streams`` manager: memory-sink views
-    of queries started here are not visible through the parent, and the
-    parent's ``streams`` does not list them."""
-    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-    child.conf.set("spark.sql.shuffle.partitions", str(stream_state_partitions(spark)))
+    The child has its own temp views and ``spark.streams`` manager:
+    memory-sink views of queries started here are not visible through
+    the parent, and the parent's ``streams`` does not list them.  The
+    child is reused rather than made per call because a session's
+    ``streams`` manager adds a listener to the SparkContext's listener
+    bus that is never removed: a fresh session (``newSession()`` or
+    ``cloneSession()``) per started query leaves one listener, and the
+    whole session behind it, for the rest of the application."""
+    width = str(stream_state_partitions(spark))
+    with _STREAM_SESSIONS_LOCK:
+        child = _STREAM_SESSIONS.get(spark)
+        if child is None:
+            child = _STREAM_SESSIONS[spark] = spark.newSession()
+        want = {**spark.conf.getAll, "spark.sql.shuffle.partitions": width}
+        have = child.conf.getAll
+        for key, value in want.items():
+            if have.get(key) != value:
+                child.conf.set(key, value)
+        for key in have.keys() - want.keys():
+            child.conf.unset(key)
     return child
 
 

@@ -8727,14 +8727,19 @@ tr AS (SELECT doc_id, unnest(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)])
 triples AS (SELECT doc_id, p[1] AS w1, p[2] AS w2, p[3] AS w3 FROM tr),
 tri AS (SELECT w1, w2, w3, count(*) AS nt FROM triples GROUP BY 1, 2, 3),
 ctx3 AS (SELECT w1, w2, sum(nt) AS nc3 FROM tri GROUP BY 1, 2),
+-- Every lookup key exists by construction: tri/ctx3 aggregate triples
+-- itself, a triple's (w2, w3) is a consecutive pair of a >=3-token doc
+-- (so in big/ctx2) and w3 is a token (so in uni).  LEFT JOIN therefore
+-- returns the INNER JOIN's rows, and it pins the join order: as inner
+-- joins, DuckDB's optimizer planned cross products between the lookups.
 s AS (SELECT doc_id,
              round(avg(-log2(0.6 * CAST(nt AS DOUBLE) / nc3
                              + 0.3 * CAST(nb AS DOUBLE) / nc2
                              + (1.0 - 0.6 - 0.3) * CAST(nu AS DOUBLE) / total)), 4)
                AS mean_neg_log2p
-      FROM triples JOIN tri USING (w1, w2, w3) JOIN ctx3 USING (w1, w2)
-                   JOIN big USING (w2, w3) JOIN ctx2 USING (w2)
-                   JOIN uni USING (w3), tot
+      FROM triples LEFT JOIN tri USING (w1, w2, w3) LEFT JOIN ctx3 USING (w1, w2)
+                   LEFT JOIN big USING (w2, w3) LEFT JOIN ctx2 USING (w2)
+                   LEFT JOIN uni USING (w3), tot
       GROUP BY doc_id)
 SELECT b.doc_id, CAST(b.n_tokens AS INT) AS n_tokens,
        coalesce(s.mean_neg_log2p, 0.0) AS mean_neg_log2p
@@ -9902,12 +9907,19 @@ def _ll10_sql() -> str:
     base-table reference is rebound to ``corpus_docs`` (the training
     slice minus d15-flagged docs), built from the same _DECON_GRAMS
     CTE fragment d15/ll09 share — one SQL body, three entries, zero
-    drift between the operator and its composition."""
+    drift between the operator and its composition.
+
+    ``corpus_docs`` is declared MATERIALIZED: DuckDB inlines a plain CTE
+    at every reference, and the ll06 body reaches its base table about
+    280 times, so the whole decontamination chain (LATERAL unnests
+    decorrelated into delim joins) was copied into each place and ran
+    out of memory.  Materialized, it is computed once; the rows are the
+    same."""
     body = _LL06_SQL.replace("FROM documents", "FROM corpus_docs")
     header = (
         "WITH RECURSIVE\n"
         + _DECON_GRAMS.strip()
-        + ",\ncorpus_docs AS (SELECT d.* FROM documents d\n"
+        + ",\ncorpus_docs AS MATERIALIZED (SELECT d.* FROM documents d\n"
         + "  LEFT JOIN hits h ON h.doc_id = d.doc_id AND h.hits >= 1\n"
         + "  WHERE d.doc_id % 10 != 0 AND h.doc_id IS NULL),\n"
     )

@@ -92,8 +92,9 @@ def _duckdb_config() -> dict:
     ``session._local_driver_memory``), one thread per usable core, and
     no spill.  A twin over the limit fails with DuckDB's out-of-memory
     error.  Spill stays off because its cap (``max_temp_directory_size``)
-    is not enforced by the DuckDB in use, and the t19 twin, let spill,
-    filled 20 GB of free disk in 25 s at sf0.001."""
+    is not enforced by the DuckDB in use: the t19 twin's old
+    cross-product plan (since rewritten), let spill, filled 20 GB of
+    free disk in 25 s at sf0.001."""
     ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     return {
         "memory_limit": f"{max(1024, ram // 4 // 1024**2)}MiB",

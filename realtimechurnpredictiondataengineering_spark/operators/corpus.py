@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from realtimechurnpredictiondataengineering_spark.cache import persist_tracked as _persist
+from realtimechurnpredictiondataengineering_spark.cache import eager_persist, persist_tracked as _persist
 
 from realtimechurnpredictiondataengineering_spark.functions.text import shingles, tokens
 
@@ -1287,13 +1287,17 @@ def ccnet_buckets(
     rather than polluting 'head' (their 0.0 sentinel score would sort
     below every real document).
 
-    Plan: the t16 scoring pass, then ONE single-row aggregate computes
-    both tercile thresholds over the non-empty scores and broadcasts
-    back onto the scored rows (the t14 percentile-gate shape — at
-    100 TB swap ``approx_percentile`` in with a documented error
-    bound).  Returns (id, n_tokens, mean_neg_log2p, bucket).
+    Plan: the t16 scoring pass, materialized once
+    (``cache.eager_persist``, freed by ``release_caches``), then ONE
+    single-row aggregate computes both tercile thresholds over the
+    non-empty scores and broadcasts back onto the scored rows (the t14
+    percentile-gate shape — at 100 TB swap ``approx_percentile`` in
+    with a documented error bound).  ``mean_neg_log2p`` is a rounded
+    average whose summation order follows the shuffle, so the
+    thresholds and the rows they bucket must read the same scores, not
+    two recomputations.  Returns (id, n_tokens, mean_neg_log2p, bucket).
     """
-    scored = unigram_logprob(df, id_col=id_col, text_col=text_col)
+    scored = eager_persist(unigram_logprob(df, id_col=id_col, text_col=text_col))
     third = repr(1.0 / 3.0)
     two_thirds = repr(2.0 / 3.0)
     thr = scored.filter(F.col("n_tokens") > 0).agg(

@@ -9931,7 +9931,12 @@ def _ll11_sql() -> str:
     every base-table reference rebinds to ``model_kept`` (documents the
     frozen DOC_QUALITY_V1 classifier keeps) — the t31 logit expression
     verbatim, so the filter and its composition share one source of
-    truth (the _ll10_sql rebinding trick)."""
+    truth (the _ll10_sql rebinding trick).
+
+    ``model_kept`` is declared MATERIALIZED for the reason ``corpus_docs``
+    is in _ll10_sql: DuckDB inlines a plain CTE at each of the ll06
+    body's ~280 base-table references, so the per-document logit was
+    recomputed in each place.  The rows are the same."""
     from realtimechurnpredictiondataengineering_spark.ml import DOC_FEATURES, DOC_QUALITY_V1
 
     xs = {
@@ -9947,7 +9952,7 @@ def _ll11_sql() -> str:
     body = _LL06_SQL.replace("FROM documents", "FROM model_kept")
     header = (
         "WITH RECURSIVE\n"
-        "model_kept AS (SELECT d.* FROM documents d\n"
+        "model_kept AS MATERIALIZED (SELECT d.* FROM documents d\n"
         f"  WHERE round({DOC_QUALITY_V1['intercept']!r} {terms}, 6) + 0.0 > 0),\n"
     )
     return body.replace("WITH RECURSIVE\n", header, 1)

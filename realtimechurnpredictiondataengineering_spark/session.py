@@ -8,9 +8,10 @@ coalescing), UTC session timezone (deterministic timestamp semantics and
 DuckDB-oracle parity), Arrow enabled for the pandas boundary (K6).
 
 Streaming state is sized apart from batch work: stateful streaming
-queries are built on ``stream_session(spark)``, a child session whose
-only difference is a shuffle width of ``stream_state_partitions``
-(cores), because AQE never shrinks a streaming query's state partitions
+queries are built on ``stream_session(spark, queries)``, a child session
+whose only difference is a shuffle width of ``stream_state_partitions``
+(the cores divided among the ``queries`` stateful streams that run at
+once), because AQE never shrinks a streaming query's state partitions
 and the checkpoint pins them at the first batch.  The parent session's
 conf is never changed for a stream, so batch work planned on it
 concurrently keeps its width.
@@ -185,33 +186,38 @@ def get_spark(**kwargs) -> SparkSession:
     return spark
 
 
-def stream_state_partitions(spark: SparkSession) -> int:
+def stream_state_partitions(spark: SparkSession, queries: int = 1) -> int:
     """Partition width for STATEFUL STREAMING queries: the session's
-    default parallelism (cores).  :func:`stream_session` is where the
-    engine applies it.
+    default parallelism (cores) shared among the ``queries`` stateful
+    streams that run at the same time, at least 1.
+    :func:`stream_session` is where the engine applies it.
 
     Batch queries start at ~3× cores and let AQE coalesce post-shuffle
     partitions to the data; streaming state gets NO such correction —
     AQE does not run on streaming plans, and the width is pinned into
-    the checkpoint at first batch.  Inheriting the batch-oriented 3×
-    width therefore buys nothing (no coalescing will ever shrink it)
-    and costs a fixed per-partition state-store overhead every
-    micro-batch: measured on ll17_streaming_warc_ingest at sf0.1, 96
-    state partitions ran 6-16 s where 8 ran 3.1 s, the cost scaling
-    with the partition count, not the data.  Cores (= what can run
-    concurrently) is the width at every scale."""
-    return max(spark.sparkContext.defaultParallelism, 1)
+    the checkpoint at first batch.  Every state partition costs a fixed
+    amount per micro-batch whatever its row count (a state-store task
+    that loads its map, writes and checksums a delta file, and forks a
+    ``chmod`` per file where Hadoop has no native library): measured on
+    ll17_streaming_warc_ingest at sf0.1, 96 state partitions ran 6-16 s
+    where 8 ran 3.1 s.  So the width is what can run concurrently: cores
+    for one stream, and a share of them when several run at once.  A
+    Silver drain runs four queries, one per entity: at cores each, its
+    16 state tasks on a 4-core box took 190-250 ms apiece, about 20 ms
+    of it CPU."""
+    return max(1, spark.sparkContext.defaultParallelism // queries)
 
 
 _STREAM_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _STREAM_SESSIONS_LOCK = threading.Lock()
 
 
-def stream_session(spark: SparkSession) -> SparkSession:
+def stream_session(spark: SparkSession, queries: int = 1) -> SparkSession:
     """The session stateful streaming queries are built on: a child of
-    ``spark`` (``newSession()``, one per parent, reused) whose only
-    difference is ``spark.sql.shuffle.partitions`` =
-    :func:`stream_state_partitions`.
+    ``spark`` (``newSession()``, one per parent and width, reused) whose
+    only difference is ``spark.sql.shuffle.partitions`` =
+    ``stream_state_partitions(spark, queries)``.  ``queries`` is the
+    number of stateful streams the caller runs at once.
 
     A streaming query clones the session of the DataFrame it starts from
     at ``start()`` and its offset log pins the width at batch 0, so the
@@ -231,13 +237,15 @@ def stream_session(spark: SparkSession) -> SparkSession:
     ``streams`` manager adds a listener to the SparkContext's listener
     bus that is never removed: a fresh session (``newSession()`` or
     ``cloneSession()``) per started query leaves one listener, and the
-    whole session behind it, for the rest of the application."""
-    width = str(stream_state_partitions(spark))
+    whole session behind it, for the rest of the application.  So a
+    parent has at most one child per width it is asked for."""
+    width = stream_state_partitions(spark, queries)
     with _STREAM_SESSIONS_LOCK:
-        child = _STREAM_SESSIONS.get(spark)
+        children = _STREAM_SESSIONS.setdefault(spark, {})
+        child = children.get(width)
         if child is None:
-            child = _STREAM_SESSIONS[spark] = spark.newSession()
-        want = {**spark.conf.getAll, "spark.sql.shuffle.partitions": width}
+            child = children[width] = spark.newSession()
+        want = {**spark.conf.getAll, "spark.sql.shuffle.partitions": str(width)}
         have = child.conf.getAll
         for key, value in want.items():
             if have.get(key) != value:

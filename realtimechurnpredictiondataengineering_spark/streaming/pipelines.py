@@ -60,16 +60,21 @@ def run_silver_dual_sink(
     1-consumer shape of Silver1.py:45-52/133-137 (SURVEY §3.2).  The wire
     key is the entity's first dedup key.
 
-    The query runs on ``session.stream_session(spark)``, so its dedup
-    state has ``stream_state_partitions`` partitions (cores) instead of
-    the batch width (3× cores): every state partition is a state-store
-    task with its own delta file and one parquet file per sink per
-    micro-batch.  ``spark``'s own conf is not changed.  A checkpoint
-    created at another width keeps that width (the offset log pins it
-    at batch 0)."""
+    A Silver drain runs one such query per entity at once, so the query
+    runs on ``session.stream_session(spark, len(SILVER_PIPELINES))``:
+    its dedup state has ``stream_state_partitions`` partitions = the
+    cores shared among the four entities (1 on 4 cores, 8 on 32), not
+    the batch width (3× cores) nor all the cores.  Every state partition
+    is a state-store task with its own delta file and one parquet file
+    per sink per micro-batch, a cost that does not depend on its rows.
+    ``spark``'s own conf is not changed.  A checkpoint created at
+    another width keeps that width (the offset log pins it at batch 0),
+    so a checkpoint written at cores width drains on at cores width."""
     from realtimechurnpredictiondataengineering_spark.sources.sinks import keyed_json
 
-    cleaned = silver_stream(stream_session(spark), entity, source_path)
+    cleaned = silver_stream(
+        stream_session(spark, len(SILVER_PIPELINES)), entity, source_path
+    )
     key_col = SILVER_PIPELINES[entity].keys[0]
 
     def table_sink(batch_df: DataFrame, batch_id: int) -> None:

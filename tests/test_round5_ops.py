@@ -447,6 +447,37 @@ def test_ccnet_buckets_splits_into_terciles(spark):
     assert buckets <= {"head", "middle", "tail", "empty"}
 
 
+def test_ccnet_buckets_same_rows_behind_a_hash_repartition(spark):
+    # thresholds and rows read one materialized scoring pass, so the
+    # buckets never overlap and repeat runs give the same rows
+    from pyspark.sql import functions as F
+
+    from realtimechurnpredictiondataengineering_spark.cache import release_caches
+
+    words = F.array(*[F.lit(w) for w in "the a of fox dog cat tree sky run zq".split()])
+
+    def word(salt):
+        return F.element_at(words, (F.abs(F.hash("id", F.lit(salt))) % 10 + 1).cast("int"))
+
+    df = spark.range(2000).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", *[word(k) for k in range(6)]).alias("text"),
+    ).repartition(8, "doc_id")
+    runs = []
+    try:
+        for _ in range(3):
+            out = corpus.ccnet_buckets(df).collect()
+            runs.append(sorted(tuple(r) for r in out))
+            by_bucket = {}
+            for r in out:
+                by_bucket.setdefault(r["bucket"], []).append(r["mean_neg_log2p"])
+            tiers = [by_bucket[b] for b in ("head", "middle", "tail")]
+            assert max(tiers[0]) < min(tiers[1]) and max(tiers[1]) < min(tiers[2])
+    finally:
+        release_caches()
+    assert runs[1] == runs[0] and runs[2] == runs[0] and len(runs[0]) == 2000
+
+
 def test_dsir_importance_ranks_target_like_docs_higher(spark):
     # target domain: medical-ish vocabulary; raw corpus: mixed — the
     # doc sharing the target vocabulary must outscore the off-domain one

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 from realtimechurnpredictiondataengineering_spark.session import stream_session, stream_state_partitions
 from realtimechurnpredictiondataengineering_spark.sources.generator import TOPICS, synthetic_topic_feed
-from realtimechurnpredictiondataengineering_spark.sources.sinks import memory_sink
+from realtimechurnpredictiondataengineering_spark.sources.sinks import (
+    foreach_batch_dual_sink,
+    keyed_json,
+    memory_sink,
+)
 from realtimechurnpredictiondataengineering_spark.streaming import pipelines
 
 
@@ -138,9 +142,11 @@ def test_foreach_batch_dual_sink_writes_both(spark, feed_dir, tmp_path):
     width = spark.conf.get("spark.sql.shuffle.partitions")
     q = pipelines.run_silver_dual_sink(spark, "profiles", feed_dir, out, ckpt)
     _drain(q)
-    # dedup state at core width, without touching the caller's session
+    # a drain runs one query per entity, so each gets its share of the
+    # cores, without touching the caller's session
     state = q.lastProgress["stateOperators"][0]
-    assert state["numShufflePartitions"] == stream_state_partitions(spark)
+    n_entities = len(pipelines.SILVER_PIPELINES)
+    assert state["numShufflePartitions"] == stream_state_partitions(spark, n_entities)
     assert spark.conf.get("spark.sql.shuffle.partitions") == width
     table = spark.read.parquet(f"{out}/table")
     wire = spark.read.parquet(f"{out}/wire")
@@ -152,16 +158,72 @@ def test_foreach_batch_dual_sink_writes_both(spark, feed_dir, tmp_path):
     assert spark.read.parquet(f"{out}/table").count() == table.count()
 
 
+def test_single_stream_state_keeps_all_cores(spark, feed_dir):
+    stream = pipelines.silver_stream(stream_session(spark), "profiles", feed_dir)
+    q = memory_sink(stream, "profiles_cores_wide")
+    _drain(q)
+    state = q.lastProgress["stateOperators"][0]
+    assert state["numShufflePartitions"] == spark.sparkContext.defaultParallelism
+
+
+def test_silver_drain_resumes_a_cores_wide_checkpoint(spark, tmp_path):
+    # a checkpoint written at cores width (before Silver shared the cores
+    # among its entities) keeps that width, and the drain neither loses
+    # nor repeats a row: the second feed repeats the first one's keys
+    # and adds new ones
+    land, out, ckpt = (str(tmp_path / d) for d in ("land", "silver", "ckpt"))
+    feeds = [synthetic_topic_feed(spark, n, seed) for n, seed in ((150, "1"), (200, "2"))]
+    feeds[0].coalesce(2).write.json(land)
+    key = pipelines.SILVER_PIPELINES["profiles"].keys[0]
+    old = pipelines.silver_stream(stream_session(spark), "profiles", land)
+    _drain(foreach_batch_dual_sink(
+        old,
+        ckpt,
+        lambda df, i: df.write.mode("append").parquet(f"{out}/table"),
+        lambda df, i: keyed_json(df, key).write.mode("append").parquet(f"{out}/wire"),
+    ))
+    feeds[1].coalesce(2).write.mode("append").json(land)
+
+    q = pipelines.run_silver_dual_sink(spark, "profiles", land, out, ckpt)
+    _drain(q)
+    cores = stream_state_partitions(spark)
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == cores
+
+    from realtimechurnpredictiondataengineering_spark.plans.silver import silver_tables_from_feed
+
+    want = silver_tables_from_feed(feeds[0].unionByName(feeds[1]))["profiles"].count()
+    table = spark.read.parquet(f"{out}/table")
+    assert table.count() == spark.read.parquet(f"{out}/wire").count() == want > 0
+    assert table.select(key).distinct().count() == want
+
+
 def test_repeated_silver_drains_leave_no_listener_behind(spark, feed_dir, tmp_path):
     # every session that starts a query adds a listener to the context's
-    # bus for good; repeated drains must not add one each
+    # bus for good; repeated drains of every entity plus a cores-wide
+    # stream must not add one each: one child per (parent, width)
+    from realtimechurnpredictiondataengineering_spark import session
+
     bus = spark.sparkContext._jsc.sc().listenerBus()
-    out, ckpt = str(tmp_path / "silver"), str(tmp_path / "ckpt")
     counts = []
     for _ in range(3):
-        _drain(pipelines.run_silver_dual_sink(spark, "profiles", feed_dir, out, ckpt))
+        queries = [
+            pipelines.run_silver_dual_sink(
+                spark, e, feed_dir, str(tmp_path / "silver" / e), str(tmp_path / "ckpt" / e)
+            )
+            for e in pipelines.SILVER_PIPELINES
+        ]
+        stream = pipelines.silver_stream(stream_session(spark), "usage", feed_dir)
+        queries.append(foreach_batch_dual_sink(
+            stream,
+            str(tmp_path / "ckpt" / "cores"),
+            lambda df, i: df.write.mode("append").parquet(str(tmp_path / "silver" / "cores")),
+        ))
+        for q in queries:
+            _drain(q)
         counts.append(bus.listeners().size())
     assert counts[1:] == counts[:1] * 2
+    widths = {stream_state_partitions(spark, n) for n in (1, len(pipelines.SILVER_PIPELINES))}
+    assert set(session._STREAM_SESSIONS[spark]) == widths
 
 
 def test_stream_session_follows_parent_conf_except_width(spark):
@@ -192,19 +254,22 @@ def test_stream_session_follows_parent_conf_except_width(spark):
 
 
 def test_stream_session_is_one_child_under_concurrent_callers(spark):
-    parent = spark.newSession()  # no child yet: every thread races to create it
-    children, errors = [], []
+    # no child yet: every thread races to create one, half of them for a
+    # single stream's width and half for a Silver entity's
+    parent = spark.newSession()
+    widths = (1, len(pipelines.SILVER_PIPELINES))
+    children, errors = {q: [] for q in widths}, []
 
-    def call():
+    def call(queries):
         try:
-            children.append(stream_session(parent))
+            children[queries].append(stream_session(parent, queries))
         except Exception as exc:  # re-raised by the assertion below
             errors.append(exc)
 
     saved = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        threads = [threading.Thread(target=call) for _ in range(8)]
+        threads = [threading.Thread(target=call, args=(widths[i % 2],)) for i in range(16)]
         for t in threads:
             t.start()
         for t in threads:
@@ -213,7 +278,10 @@ def test_stream_session_is_one_child_under_concurrent_callers(spark):
         sys.setswitchinterval(saved)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    assert len(children) == 8 and len({id(c) for c in children}) == 1
+    for queries, got in children.items():
+        assert len(got) == 8 and len({id(c) for c in got}) == 1
+        width = got[0].conf.get("spark.sql.shuffle.partitions")
+        assert width == str(stream_state_partitions(parent, queries))
 
 
 def test_stream_stream_join_time_bounded(spark, tmp_path):

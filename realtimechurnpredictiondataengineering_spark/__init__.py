@@ -11,7 +11,7 @@ Layout
 - ``plans``      : composed pipelines (bronze parse, silver validate, gold
                    enrichment) and the driver-facing query inventory
 - ``streaming``  : Structured Streaming pipelines (watermark dedup,
-                   foreachBatch dual sink, stateful sessionization)
+                   foreachBatch dual sink, windowed counts)
 
 All transformations are pure DataFrame -> DataFrame functions, sink-free,
 so each is unit-testable and composable (SURVEY §7 design note).

@@ -213,18 +213,6 @@ def fingerprint_md5(col: Column | str) -> Column:
     return F.md5(normalized(col))
 
 
-def fingerprint_rolling(col: Column | str, base: int = 257, mod: int = 1_000_000_007) -> Column:
-    """Polynomial rolling-hash fingerprint over the normalized text's
-    characters: ``h = (h*base + code(ch)) %% mod``.  Computed with the
-    ``aggregate`` higher-order function — one JVM-side pass, no UDF."""
-    chars = F.split(normalized(col), "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
-    )
-
-
 def word_kgrams(toks: Column, k: int, min_one: bool = True) -> Column:
     """Positional stride-1 word k-grams of a token array (the shared
     core of shingling, repetition folds, and duplicated-span grams).

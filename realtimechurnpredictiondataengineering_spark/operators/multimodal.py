@@ -378,7 +378,7 @@ def mp3_header_meta(media: DataFrame) -> DataFrame:
     Returns (media_id, fmt, bitrate_kbps, sample_rate, n_channels,
     n_frames, duration_ms, est_duration_ms, n_bytes).
 
-    Bounded-prefix caveat (documented contract, round-13 ADVICE): all
+    Bounded-prefix caveat (documented contract): all
     reads happen inside the ``_HEADER_PREFIX_BYTES`` hex window, so an
     MP3 whose ID3v2 tag exceeds 64 KiB — embedded cover art is the
     common real-world case — reports fmt 'mp3' with NULL frame fields
@@ -520,7 +520,7 @@ def mp4_header_meta(media: DataFrame) -> DataFrame:
     Returns (media_id, fmt, major_brand, timescale, duration_ms,
     n_tracks, n_bytes).
 
-    Bounded-prefix caveat (documented contract, round-13 ADVICE): a
+    Bounded-prefix caveat (documented contract): a
     streaming-unfriendly file whose ``moov`` FOLLOWS a large ``mdat``
     (> 64 KiB) reports fmt 'mp4' with NULL timescale/duration on both
     engines — the top-level walk cannot jump past data outside the

@@ -1016,67 +1016,21 @@ def ann_recall(
     )
 
 
-def lsh_knn_candidates(plane_sets: list[list[list[float]]]):
-    """Candidate generator for ``knn_label_accuracy``: hyperplane-LSH
-    bucketed candidate pairs instead of the exact cross join — the
-    100 TB sweep path the brute-force eval cannot walk.
-
-    Returns a ``candidates_fn(e, qs, id_col, vec_col)`` producing scored
-    (__qid, id, cos_sim) candidate rows via the same one-scan multi-table
-    bucket equi-join as ``lsh_topk`` (corpus side exploded once across
-    all tables, broadcast bucketed queries, dedup per pair).  Self-pairs
-    are NOT filtered here — ``knn_label_accuracy`` owns the
-    leave-one-out exclusion so every candidate source shares it.
-    """
-
-    def _candidates(e: DataFrame, qs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-        c = fan_out(e).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode(hyperplane_table_buckets(F.col(vec_col), plane_sets)).alias(
-                "table_id", "bucket"
-            ),
-        )
-        q = qs.select(
-            F.col("__qid"),
-            F.col("__qvec"),
-            F.posexplode(hyperplane_table_buckets(F.col("__qvec"), plane_sets)).alias(
-                "table_id", "bucket"
-            ),
-        )
-        return (
-            c.join(F.broadcast(q), ["table_id", "bucket"])
-            .dropDuplicates(["__qid", id_col])
-            .select(
-                F.col("__qid"),
-                F.col(id_col),
-                cosine(F.col(vec_col), F.col("__qvec")).alias("cos_sim"),
-            )
-        )
-
-    return _candidates
-
-
 def knn_label_accuracy(
     df: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    candidates_fn=None,
 ) -> DataFrame:
     """Leave-one-out k-NN label accuracy — the standard intrinsic
     embedding-quality eval: each vector's label is predicted by majority
     vote of its k nearest neighbors (cosine, self excluded) and compared
     to its own label, reported per label class.
 
-    ``candidates_fn(e, qs, id_col, vec_col) -> (__qid, id, cos_sim)``
-    selects the neighbor-candidate strategy: the default ``None`` is the
-    exact brute-force cross join (eval slices are sample-sized by
-    definition, and exact neighbors ARE the oracle semantics for v11);
-    pass ``lsh_knn_candidates(plane_sets)`` for the full-corpus sweep —
-    bucketed candidates, identical voting tail, accuracy within LSH
-    recall of the exact path (tested on clustered data).  Vote ties
+    Neighbors come from the exact brute-force cross join: eval slices
+    are sample-sized by definition, and exact neighbors ARE the oracle
+    semantics for v11.  Vote ties
     break toward the smaller label, neighbor ties toward the larger id
     (``topk_reduce``'s order), both deterministic and oracle-replayable.
     Returns (label, n, n_correct, accuracy).
@@ -1087,20 +1041,15 @@ def knn_label_accuracy(
         F.col(vec_col).alias("__qvec"),
         F.col(label_col).alias("__qlabel"),
     )
-    if candidates_fn is None:
-        scored = (
-            fan_out(e).crossJoin(F.broadcast(qs))
-            .select(
-                F.col("__qid"),
-                F.col(id_col),
-                cosine(F.col(vec_col), F.col("__qvec")).alias("cos_sim"),
-            )
+    scored = (
+        fan_out(e).crossJoin(F.broadcast(qs))
+        .select(
+            F.col("__qid"),
+            F.col(id_col),
+            cosine(F.col(vec_col), F.col("__qvec")).alias("cos_sim"),
         )
-    else:
-        scored = candidates_fn(e, qs, id_col, vec_col)
-    # Leave-one-out: the self pair is excluded HERE, after candidate
-    # generation, so exact and LSH paths share the same exclusion.
-    scored = scored.filter(F.col(id_col) != F.col("__qid"))
+        .filter(F.col(id_col) != F.col("__qid"))
+    )
     nn = topk_reduce(scored, "__qid", id_col, "cos_sim", k)
     votes = (
         nn.join(e.select(F.col(id_col), F.col(label_col).alias("__nlabel")), id_col)

@@ -1,19 +1,15 @@
 """Skew mitigation (SURVEY §4 partitioning/shuffle; 100 TB posture).
 
 AQE's skew-join splitting (enabled in ``session.ENGINE_CONF``) handles
-most hot-key cases at runtime; these operators are the explicit variants
+most hot-key cases at runtime; ``salted_agg`` is the explicit variant
 for when the skew is known and extreme (a null key, a bot user, a
-boilerplate document) and the plan must not depend on runtime detection:
+boilerplate document) and the plan must not depend on runtime detection.
+It is a two-phase aggregation: a partial aggregate on (key, salt)
+spreads one hot key over N reducers, then a final combine on the key.
+Only algebraic aggregates (sum/count/min/max) compose this way; avg is
+derived as sum/count.
 
-- ``salted_agg`` — two-phase aggregation: partial aggregate on
-  (key, salt) spreads one hot key over N reducers, then a final combine
-  on the key.  Only algebraic aggregates (sum/count/min/max) compose
-  this way; avg is derived as sum/count.
-- ``salted_broadcast_left_join`` — replicate the (small) right side N
-  ways and salt the skewed left side, so one hot join key fans across N
-  tasks instead of melting one.
-
-Both use deterministic salts derived from xxhash64 of a distributor
+The salts are deterministic, derived from xxhash64 of a distributor
 column (not ``rand()``), so results are reproducible and oracle-checkable.
 """
 
@@ -68,23 +64,3 @@ def salted_agg(
     )
     return staged.groupBy(*keys).agg(*finals)
 
-
-def salted_broadcast_left_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    distributor: str,
-    buckets: int = 16,
-) -> DataFrame:
-    """Left join a skewed fact side against a small dimension with explicit
-    salting: the dimension is replicated ``buckets`` times (it is small —
-    that is the precondition), the fact side salts on a distributor
-    column, and the join key becomes (key, salt) so a hot key spreads
-    across tasks even under a shuffle join.  With broadcast available this
-    is belt-and-braces; without (dim just over the broadcast threshold) it
-    is the difference between one 4-hour task and N even ones."""
-    salted_left = skewed.withColumn("__salt", _salt(distributor, buckets))
-    replicated = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i).cast("bigint") for i in range(buckets)]))
-    )
-    return salted_left.join(replicated, on=[key, "__salt"], how="left").drop("__salt")

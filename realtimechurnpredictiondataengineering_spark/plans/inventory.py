@@ -10450,7 +10450,7 @@ def w09(spark, sf_dir):
 # t19_trigram_logprob, prof03_expectations, s09_weighted_sample,
 # t20_ccnet_buckets, t21_dsir_importance; the round-5
 # reshapes (t16 vocab-cap knob + persist, d09/d10/d12 shared-scan
-# persist, t13 NULL-coalesce, v11 candidates_fn refactor, ll01 via the
+# persist, t13 NULL-coalesce, v11 candidate-source refactor, ll01 via the
 # gopher coalesce, t07 empty-doc term guard) were all already inside
 # the window.  The token_count NULL→0 change touches many t-family
 # plans but alters NO output on NULL-free data (the driver tables carry
@@ -10651,7 +10651,7 @@ def w09(spark, sf_dir):
 # Round-14 rotation: with the never-driver-checked backlog at ZERO
 # (round-13 verdict), the regime switches to STALE-FIRST re-verification
 # (round-13 verdict task 4): per-entry last-green rounds come from the
-# union of CORRECTNESS_r1-r13, and the window takes the OLDEST checks
+# r1-r13 correctness checks, and the window takes the OLDEST checks
 # first.  (a) New/reshaped entries rotate IN per the standing rule:
 # ll15_warc_ingest (now HTTP-real: response content splits at the
 # second CRLF CRLF into status/headers vs BODY, WET conversion records

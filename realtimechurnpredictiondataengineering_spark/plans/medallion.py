@@ -91,22 +91,25 @@ def run_medallion(
     return gold
 
 
+#: the four per-customer hand-off frames and their columns, in order
+_REPORT_FRAMES: dict[str, list[str]] = {
+    "app_usage_features": ["customer_id", "days_since_last_login", "sessions"],
+    "revenue_features": ["customer_id", "total_revenue", "n_orders", "arpu"],
+    "decline_features": ["customer_id", "total_declined", "avg_declined"],
+    "support_features": ["customer_id", "avg_ticket_sentiment"],
+}
+
+
 def gold_report_frames(gold: DataFrame, max_rows: int = 10_000) -> dict[str, pd.DataFrame]:
     """The five visualization hand-off frames (Gold1.py:129-133 shape),
-    Arrow-collected with a row cap — the viz layer's inputs."""
+    Arrow-collected with a row cap — the viz layer's inputs.  The four
+    per-customer frames are column slices of ONE capped collect, so they
+    hold the same customers by construction; ``churn_flags`` aggregates
+    every row."""
+    cols = list(dict.fromkeys(c for frame in _REPORT_FRAMES.values() for c in frame))
+    wide = to_pandas(gold.select(*cols), max_rows)
     return {
-        "app_usage_features": to_pandas(
-            gold.select("customer_id", "days_since_last_login", "sessions"), max_rows
-        ),
-        "revenue_features": to_pandas(
-            gold.select("customer_id", "total_revenue", "n_orders", "arpu"), max_rows
-        ),
-        "decline_features": to_pandas(
-            gold.select("customer_id", "total_declined", "avg_declined"), max_rows
-        ),
-        "support_features": to_pandas(
-            gold.select("customer_id", "avg_ticket_sentiment"), max_rows
-        ),
+        **{name: wide[frame] for name, frame in _REPORT_FRAMES.items()},
         "churn_flags": to_pandas(
             gold.groupBy("segment").agg(
                 F.count("*").alias("n"), F.sum("churn_risk").alias("n_at_risk")

@@ -13,7 +13,6 @@ from realtimechurnpredictiondataengineering_spark.sources.batch import (
     delta_available,
     delta_scan,
     load_table,
-    load_tables,
     read_format,
     register_views,
 )
@@ -45,7 +44,6 @@ __all__ = [
     "delta_scan",
     "load_table",
     "read_format",
-    "load_tables",
     "register_views",
     "synthetic_topic_feed",
     "file_stream",

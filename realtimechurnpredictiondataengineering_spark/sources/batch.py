@@ -59,12 +59,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, *names: str) -> dict[str, DataFrame]:
-    """Load several tables as a dict (all lazy)."""
-    use = names or TABLES
-    return {n: load_table(spark, n, sf_dir) for n in use}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view so ``spark.sql`` works alongside
     the DataFrame API (one logical plan either way)."""

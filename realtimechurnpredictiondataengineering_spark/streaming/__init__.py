@@ -1,6 +1,5 @@
-"""Structured Streaming pipelines (SURVEY §2.8 ST1-ST6) + the
-``transformWithStateInPandas`` custom-stateful extension point."""
+"""Structured Streaming pipelines (SURVEY §2.8 ST1-ST6)."""
 
-from realtimechurnpredictiondataengineering_spark.streaming import pipelines, stateful  # noqa: F401
+from realtimechurnpredictiondataengineering_spark.streaming import pipelines  # noqa: F401
 
-__all__ = ["pipelines", "stateful"]
+__all__ = ["pipelines"]

@@ -108,72 +108,6 @@ def tumbling_counts(
     )
 
 
-def session_windows(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    key: str = "user_id",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """ST5 — session windows: activity bursts per key separated by >gap."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(key))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col(key),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def rollup_stream(
-    events_stream: DataFrame,
-    partials_dir: str,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-    keys: tuple[str, ...] = ("event_type",),
-) -> StreamingQuery:
-    """Streaming continuous aggregate (the hypertable ingest path): every
-    micro-batch appends its OWN hourly partials — no read-modify-write,
-    no state store growth — and ``read_rollup`` re-merges partials at
-    query time.  Duplicate (bucket, key) rows across batches are the
-    design, not a bug: the merge aggregates are the same decomposable
-    set used by ``operators.rollup``, so late-arriving partials fold in
-    exactly — which is also why NO watermark is needed: there is no
-    stateful aggregation to bound, and an arbitrarily late event simply
-    lands as one more partial row that merges on read.  Append-only
-    writes keep the sink exactly-once under the checkpoint, and a
-    compaction job can fold old partials without changing any reader."""
-    from realtimechurnpredictiondataengineering_spark.operators import rollup
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        rollup.rollup_leaf(batch_df, ts_col, keys).write.mode("append").parquet(partials_dir)
-
-    return (
-        events_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_rollup(
-    spark: SparkSession,
-    partials_dir: str,
-    grain: str = "hour",
-    keys: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Merged view over streamed partials at any grain >= the leaf's."""
-    from realtimechurnpredictiondataengineering_spark.operators import rollup
-
-    return rollup.rollup_merge(spark.read.parquet(partials_dir), keys, grain)
-
-
 def streaming_incremental_dedup(
     docs_stream: DataFrame,
     corpus_fingerprints: DataFrame,
@@ -368,49 +302,3 @@ def streaming_merge_upserts(
         .start()
     )
 
-
-def streaming_semantic_dedup(
-    vec_stream: DataFrame,
-    corpus_vectors: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Streaming flavor of SemDeDup ingest (the v16/v17 machinery on a
-    live feed): an arriving embedding is dropped when the accepted
-    corpus already holds a semantic duplicate — same cluster, cosine at
-    or above ``threshold``.
-
-    Cluster assignment is the scan-local centroid-literal argmax on
-    BOTH sides (no shuffle to assign); the reject test is ONE
-    stream-static LEFT ANTI join keyed on the cluster id with the
-    cosine threshold as the residual predicate, so each micro-batch
-    probes only the clusters its rows land in — write the corpus index
-    partitioned/bucketed by cluster id and the static scan prunes to
-    those clusters (at production scale the static side carries PQ
-    codes, not floats; the join shape is identical).  The static side
-    is re-resolved every micro-batch, so a corpus refresh is picked up
-    without restarting the query.  Stateless — no watermark needed;
-    within-stream duplicates are the batch near-dup job's concern,
-    exactly as in ``streaming_incremental_dedup`` stage 3.
-
-    Returns the surviving streaming rows (original columns).
-    """
-    from realtimechurnpredictiondataengineering_spark.functions.vectors import cosine
-    from realtimechurnpredictiondataengineering_spark.operators.similarity import _nearest_centroid
-
-    cents_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
-    assigned = vec_stream.withColumn(
-        "_cid", _nearest_centroid(F.col(vec_col), cents_lit)
-    )
-    existing = corpus_vectors.select(
-        _nearest_centroid(F.col(vec_col), cents_lit).alias("_ecid"),
-        F.col(vec_col).alias("_evec"),
-    )
-    cond = (F.col("_cid") == F.col("_ecid")) & (
-        cosine(F.col(vec_col), F.col("_evec")) >= threshold
-    )
-    return assigned.join(existing, cond, "left_anti").drop("_cid")

@@ -39,3 +39,10 @@ def test_gold_report_frames_shapes(spark, sf_dir):
     }
     assert all(len(f) > 0 for f in frames.values())
     assert list(frames["churn_flags"].columns) == ["segment", "n", "n_at_risk"]
+    # the four per-customer frames hold the same capped set of customers
+    ids = [
+        set(frames[name]["customer_id"])
+        for name in ("app_usage_features", "revenue_features", "decline_features", "support_features")
+    ]
+    assert len(ids[0]) == 50
+    assert all(s == ids[0] for s in ids)

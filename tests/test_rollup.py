@@ -39,30 +39,3 @@ def test_rollup_counts_and_bounds(spark):
     jan1_click = r[("2024-01-01 00:00:00", "click")]
     assert jan1_click["n_events"] == 2 and jan1_click["total_value"] == 4.0
     assert jan1_click["min_value"] == 1.0 and jan1_click["max_value"] == 3.0
-
-
-def test_rollup_stream_merges_across_batches(spark, tmp_path):
-    from realtimechurnpredictiondataengineering_spark.streaming import pipelines
-
-    src = str(tmp_path / "src")
-    partials = str(tmp_path / "partials")
-    ckpt = str(tmp_path / "ckpt")
-    b1 = _events(spark).filter(F.col("event_id") <= 2)
-    b2 = _events(spark).filter(F.col("event_id") > 2)
-    b1.coalesce(1).write.mode("append").parquet(src)
-
-    stream = lambda: spark.readStream.schema(b1.schema).parquet(src)  # noqa: E731
-    pipelines.rollup_stream(stream(), partials, ckpt).awaitTermination(120)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    pipelines.rollup_stream(stream(), partials, ckpt).awaitTermination(120)
-
-    merged = {
-        (str(r["bucket"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in pipelines.read_rollup(spark, partials, "day").collect()
-    }
-    direct = {
-        (str(r["bucket"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in rollup.rollup_leaf(_events(spark), grain="day").collect()
-    }
-    # two independent batch appends merge to exactly the one-shot answer
-    assert merged == direct

@@ -1,4 +1,4 @@
-"""Round-10 operator tests: ADVICE fixes (crash-recoverable MERGE
+"""Round-10 operator tests: hardening fixes (crash-recoverable MERGE
 snapshot swap, bpe_train edge guards, embedding_psi probe edges) and
 the round's new operators."""
 
@@ -22,7 +22,7 @@ def _one_file_feed(df, tmp_path, name):
 
 
 def test_merge_swap_recovers_crash_between_retire_and_promote(spark, tmp_path):
-    # the ADVICE window: old protocol rmtree'd the live snapshot before
+    # the crash window: the old protocol rmtree'd the live snapshot before
     # moving the staged one in — a crash in between left NO snapshot and
     # the replayed batch silently re-bootstrapped, losing every
     # previously-merged key.  New protocol leaves a ``.old`` sibling;

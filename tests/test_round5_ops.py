@@ -1,6 +1,6 @@
-"""Round-5 unit tests: unigram_logprob's top-V vocabulary cap, the
-LSH-backed knn_label_accuracy candidate path, gopher_rules' NULL-text
-reject, and the sessionize property test vs a brute-force reference.
+"""Round-5 unit tests: unigram_logprob's top-V vocabulary cap,
+gopher_rules' NULL-text reject, and the sessionize property test vs a
+brute-force reference.
 
 One hypothesis example = one Spark job, so example counts stay small
 (the JVM round-trip, not the property, is the cost).
@@ -68,43 +68,6 @@ def test_unigram_logprob_cap_tiebreak_is_deterministic(spark):
         3 * math.log2(3 / 7) + 2 * math.log2(2 / 7) + 2 * math.log2(2 / 7)
     ) / 7
     assert out["mean_neg_log2p"] == round(want, 4)
-
-
-# ---------------------------------------------------------------------------
-# knn_label_accuracy with LSH candidates
-# ---------------------------------------------------------------------------
-
-
-def _clustered_vectors(spark):
-    # two tight axis-aligned clusters + one planted mislabeled point
-    rows = []
-    for i in range(6):
-        rows.append((i, [10.0 + 0.01 * i, 0.0], 0))
-    for i in range(6, 12):
-        rows.append((i, [0.0, 10.0 + 0.01 * i], 1))
-    rows.append((99, [10.0, 0.05], 9))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-
-
-def test_knn_label_accuracy_lsh_matches_exact_on_clusters(spark):
-    df = _clustered_vectors(spark)
-    # two hash tables whose planes separate the axis clusters cleanly:
-    # every same-cluster pair shares a bucket, so LSH recall is 1 here
-    # and the LSH path must reproduce the exact path's accuracy table
-    plane_sets = [
-        [[1.0, -1.0], [1.0, 1.0]],
-        [[0.3, -1.0], [1.0, 0.2]],
-    ]
-    exact = {r["label"]: r.asDict() for r in similarity.knn_label_accuracy(df, k=3).collect()}
-    lsh = {
-        r["label"]: r.asDict()
-        for r in similarity.knn_label_accuracy(
-            df, k=3, candidates_fn=similarity.lsh_knn_candidates(plane_sets)
-        ).collect()
-    }
-    assert lsh == exact
-    assert lsh[0]["accuracy"] == 1.0 and lsh[1]["accuracy"] == 1.0
-    assert lsh[9]["accuracy"] == 0.0
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Round-9 operator tests: ADVICE fixes (completeness escaping,
+"""Round-9 operator tests: hardening fixes (completeness escaping,
 embedding_psi dims guard) and the round's new operators."""
 
 from __future__ import annotations

@@ -44,16 +44,6 @@ def test_salted_agg_spreads_hot_key(spark, skewed_df):
     assert hot_buckets > 8  # hot key split over most of the 16 salt buckets
 
 
-def test_salted_join_matches_plain(spark, skewed_df):
-    dim = spark.createDataFrame([("hot", "H"), ("k5", "K")], "k string, label string")
-    plain = sorted((r["rowid"], r["label"]) for r in skewed_df.join(dim, "k", "left").collect())
-    salted = sorted(
-        (r["rowid"], r["label"])
-        for r in skew.salted_broadcast_left_join(skewed_df, dim, "k", distributor="rowid").collect()
-    )
-    assert salted == plain
-
-
 def test_non_algebraic_aggregate_rejected(spark, skewed_df):
     with pytest.raises(ValueError, match="non-algebraic"):
         skew.salted_agg(skewed_df, ["k"], {"d": ("countDistinct", "v")}, "rowid")

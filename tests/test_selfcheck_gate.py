@@ -1,4 +1,4 @@
-"""Regression tests for the selfcheck bitwise-hash gate (VERDICT r8 §2).
+"""Regression tests for the selfcheck bitwise-hash gate.
 
 Round 8 shipped ml04 red because every local gate compared values with
 tuple equality, where Python says ``0.0 == -0.0`` — the driver's

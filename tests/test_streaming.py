@@ -309,47 +309,6 @@ def test_stream_stream_join_time_bounded(spark, tmp_path):
     assert ks == [1]
 
 
-def test_session_windows_streaming(spark, tmp_path):
-    # Two bursts for user 1 separated by > 30 min, one burst for user 2;
-    # a far-future batch-2 event advances the watermark so append mode
-    # emits the closed sessions.
-    import time
-
-    src = str(tmp_path / "sess")
-
-    def _write(rows):
-        spark.createDataFrame(rows, "ts_s string, user_id long") \
-            .select(F.to_timestamp("ts_s").alias("ts"), "user_id") \
-            .coalesce(1).write.mode("append").parquet(src)
-
-    _write([
-        ("2024-01-01 00:00:00", 1), ("2024-01-01 00:10:00", 1),  # session A (2 events)
-        ("2024-01-01 01:00:00", 1),                              # session B (1 event)
-        ("2024-01-01 00:05:00", 2),                              # session C (1 event)
-    ])
-    time.sleep(1.1)
-    _write([("2024-01-01 06:00:00", 9)])
-
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = memory_sink(
-        pipelines.session_windows(stream, gap="30 minutes", watermark="10 minutes"),
-        "sess_win",
-        output_mode="append",
-    )
-    _drain(q)
-    got = {
-        (r["user_id"], str(r["session_start"])): r["n_events"]
-        for r in spark.sql("SELECT * FROM sess_win").collect()
-    }
-    assert got[(1, "2024-01-01 00:00:00")] == 2
-    assert got[(1, "2024-01-01 01:00:00")] == 1
-    assert got[(2, "2024-01-01 00:05:00")] == 1
-
-
 def test_complete_output_mode_recomputes_totals(spark, tmp_path):
     # ST2 complete mode: every trigger emits the FULL aggregate state —
     # after two batches the totals reflect both.
@@ -375,77 +334,6 @@ def test_complete_output_mode_recomputes_totals(spark, tmp_path):
     _drain(q)
     got = {r["event_type"]: r["total"] for r in spark.sql("SELECT * FROM complete_totals").collect()}
     assert got == {"click": 7.0, "view": 10.0}
-
-
-def test_transform_with_state_deviation_flags(spark, tmp_path):
-    # transformWithStateInPandas speaks protobuf to the JVM state server;
-    # the container has no google.protobuf, so the operator is gated the
-    # same way as the Kafka/Delta formats: real code, env-dependent test.
-    pytest.importorskip("google.protobuf")
-    from realtimechurnpredictiondataengineering_spark.streaming.stateful import deviation_flags
-
-    src = str(tmp_path / "tws")
-    base = [("a", 10.0 + (i % 3), f"2024-01-01 00:0{i}:00") for i in range(6)]
-    rows = base + [("a", 99.0, "2024-01-01 00:07:00"),  # clear outlier
-                   ("b", 1.0, "2024-01-01 00:08:00")]   # too little history
-    spark.createDataFrame(rows, "key string, value double, ts_s string") \
-        .select("key", "value", F.to_timestamp("ts_s").alias("ts")) \
-        .coalesce(1).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema("key string, value double, ts timestamp").parquet(src)
-    q = memory_sink(deviation_flags(stream, min_history=5), "tws_flags", output_mode="append")
-    _drain(q)
-    got = spark.sql("SELECT * FROM tws_flags").collect()
-    assert len(got) == 8
-    flagged = [r for r in got if r["is_anomaly"]]
-    assert [(r["key"], r["value"]) for r in flagged] == [("a", 99.0)]
-    assert all(not r["is_anomaly"] for r in got if r["key"] == "b")
-
-
-def test_deviation_processor_fold_logic():
-    # Unit-test the TWS handler against a stub handle (the streaming
-    # runtime's protobuf bridge is absent in this container).
-    import pandas as pd
-
-    from realtimechurnpredictiondataengineering_spark.streaming.stateful import DeviationProcessor
-
-    class StubListState:
-        def __init__(self):
-            self.rows = []
-        def exists(self):
-            return bool(self.rows)
-        def get(self):
-            return iter(self.rows)
-        def put(self, rows):
-            self.rows = list(rows)
-        def clear(self):
-            self.rows = []
-
-    class StubHandle:
-        def __init__(self):
-            self.state = StubListState()
-            self.ttl = None
-        def getListState(self, name, schema, ttlDurationMs=None):
-            self.ttl = ttlDurationMs
-            return self.state
-
-    p = DeviationProcessor("key", "value", "ts", z_threshold=3.0,
-                           min_history=5, max_history=6, state_ttl_ms=1234)
-    h = StubHandle()
-    p.init(h)
-    assert h.ttl == 1234
-
-    def batch(vals, t0=0):
-        return pd.DataFrame({"key": ["a"] * len(vals), "ts": range(t0, t0 + len(vals)),
-                             "value": vals})
-
-    out1 = pd.concat(p.handleInputRows(("a",), iter([batch([10.0, 11.0, 10.0, 11.0, 10.0])]), None))
-    assert not out1["is_anomaly"].any()  # below min_history while folding
-    out2 = pd.concat(p.handleInputRows(("a",), iter([batch([10.5, 99.0], t0=5)]), None))
-    assert list(out2["is_anomaly"]) == [False, True]  # outlier flagged vs prior history
-    # history capped at max_history=6 and persisted through the stub state
-    assert len(h.state.rows) == 6
-    assert [r[0] for r in h.state.rows][-2:] == [10.5, 99.0]
 
 
 def test_streaming_incremental_dedup(spark, tmp_path):
@@ -640,60 +528,3 @@ def test_delta_stream_sink_restart_recovers_exactly_once(spark, tmp_path):
     rows = [r["id"] for r in spark.read.parquet(out).collect()]
     # no gaps AND no dupes: batch A appears exactly once across both runs
     assert sorted(rows) == list(range(20))
-
-
-def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
-    # the streamed survivor set must EQUAL the batch anti-join with the
-    # same centroids/threshold: near-duplicates of accepted corpus
-    # vectors are rejected, novel vectors pass
-    import json as _json
-    import os
-
-    from pyspark.sql import types as T
-
-    from realtimechurnpredictiondataengineering_spark.operators.similarity import train_ivf_centroids
-    from realtimechurnpredictiondataengineering_spark.sources.sinks import memory_sink
-    from realtimechurnpredictiondataengineering_spark.sources.streaming import file_stream
-    from realtimechurnpredictiondataengineering_spark.streaming.pipelines import (
-        streaming_semantic_dedup,
-    )
-
-    def vec(axis, dim=8, scale=1.0):
-        v = [0.0] * dim
-        v[axis] = scale
-        return v
-
-    corpus_rows = [(i, vec(i % 4)) for i in range(8)]
-    corpus = spark.createDataFrame(corpus_rows, "vec_id long, embedding array<double>")
-    cents = train_ivf_centroids([r[1] for r in corpus_rows], nlist=4)
-    arrivals = [
-        (100, vec(0, scale=2.0)),   # scaled copy of axis 0 -> cosine 1.0 -> reject
-        (101, vec(1, scale=0.5)),   # scaled copy of axis 1 -> reject
-        (102, [1.0] * 8),           # diagonal, cosine ~0.35 to any axis -> keep
-        (103, [1.0, -1.0] * 4),     # another novel direction -> keep
-    ]
-    src = str(tmp_path / "vecstream")
-    os.makedirs(src)
-    with open(os.path.join(src, "part.json"), "w") as fh:
-        for i, v in arrivals:
-            fh.write(_json.dumps({"vec_id": i, "embedding": v}) + "\n")
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = file_stream(spark, src, schema)
-    q = memory_sink(
-        streaming_semantic_dedup(stream, corpus, cents, threshold=0.95),
-        "sem_dedup_out",
-    )
-    q.awaitTermination(120)
-    streamed = {r["vec_id"] for r in spark.sql("SELECT * FROM sem_dedup_out").collect()}
-    batch_in = spark.createDataFrame(arrivals, schema)
-    batch = {
-        r["vec_id"]
-        for r in streaming_semantic_dedup(batch_in, corpus, cents, threshold=0.95).collect()
-    }
-    assert streamed == batch == {102, 103}
-

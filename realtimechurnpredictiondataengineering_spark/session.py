@@ -14,7 +14,11 @@ whose only difference is a shuffle width of ``stream_state_partitions``
 once), because AQE never shrinks a streaming query's state partitions
 and the checkpoint pins them at the first batch.  The parent session's
 conf is never changed for a stream, so batch work planned on it
-concurrently keeps its width.
+concurrently keeps its width.  Each call compares the two sessions' SQL
+conf inside the JVM and re-syncs only when they differ, and a streaming
+frame built on the child (``stream_frame``) is kept with it until that
+conf changes, so a repeated drain starts its queries without rebuilding
+their plans.
 
 On a real cluster none of the local-mode bits apply: the builder only sets
 ``master`` when none is configured, so ``spark-submit --master yarn/k8s``
@@ -26,8 +30,9 @@ from __future__ import annotations
 import os
 import threading
 import weakref
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Config that is correct at every scale (local[32] test box or a
 # 1000-executor cluster). Anything sized to the local box stays out of
@@ -208,6 +213,8 @@ def stream_state_partitions(spark: SparkSession, queries: int = 1) -> int:
     return max(1, spark.sparkContext.defaultParallelism // queries)
 
 
+_WIDTH = "spark.sql.shuffle.partitions"
+# parent -> {width: (child, {name: (source, streaming DataFrame)})}
 _STREAM_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _STREAM_SESSIONS_LOCK = threading.Lock()
 
@@ -227,8 +234,13 @@ def stream_session(spark: SparkSession, queries: int = 1) -> SparkSession:
     that width.  ``newSession()`` drops runtime-set conf (a timezone set
     on the parent at runtime is back at the SparkContext's value in the
     child, and Silver's ``from_json`` timestamp parsing depends on it),
-    so every call brings the child's conf level with the parent's,
-    setting only the keys that differ.
+    so every call brings the child's conf level with the parent's.  The
+    check is one comparison of the two sessions' ``getAllConfs()`` maps
+    inside the JVM (under a millisecond; reading both maps into Python
+    costs tens of milliseconds); only when they differ, on either side,
+    are the keys that differ set or unset, and the frames
+    ``stream_frame`` kept for the child are dropped, because analysis
+    binds conf into a plan (``from_json`` takes the session timezone).
 
     The child has its own temp views and ``spark.streams`` manager:
     memory-sink views of queries started here are not visible through
@@ -239,20 +251,59 @@ def stream_session(spark: SparkSession, queries: int = 1) -> SparkSession:
     ``cloneSession()``) per started query leaves one listener, and the
     whole session behind it, for the rest of the application.  So a
     parent has at most one child per width it is asked for."""
-    width = stream_state_partitions(spark, queries)
     with _STREAM_SESSIONS_LOCK:
-        children = _STREAM_SESSIONS.setdefault(spark, {})
-        child = children.get(width)
-        if child is None:
-            child = children[width] = spark.newSession()
-        want = {**spark.conf.getAll, "spark.sql.shuffle.partitions": str(width)}
+        return _synced_child(spark, queries)[0]
+
+
+def stream_frame(
+    spark: SparkSession,
+    queries: int,
+    name: str,
+    source: str,
+    build: Callable[[SparkSession], DataFrame],
+) -> DataFrame:
+    """The unstarted streaming DataFrame ``build(child)`` on the
+    ``stream_session(spark, queries)`` child, kept with that child under
+    ``name``: a later call with the same ``source`` returns the same
+    frame, so starting its query again costs a query start and no
+    plan build.  One frame per ``name``: a call with another ``source``
+    replaces it, and a conf sync that changes the child drops them all.
+    A streaming DataFrame can start any number of queries; each start
+    makes its own source and state from its checkpoint."""
+    with _STREAM_SESSIONS_LOCK:
+        child, frames = _synced_child(spark, queries)
+        kept = frames.get(name)
+        if kept is None or kept[0] != source:
+            kept = frames[name] = (source, build(child))
+        return kept[1]
+
+
+def _synced_child(
+    spark: SparkSession, queries: int
+) -> tuple[SparkSession, dict[str, tuple[str, DataFrame]]]:
+    """``(child, frames)`` of ``spark`` at the width for ``queries``,
+    made on first use and brought level with the parent's conf; the
+    caller holds ``_STREAM_SESSIONS_LOCK``."""
+    width = stream_state_partitions(spark, queries)
+    children = _STREAM_SESSIONS.setdefault(spark, {})
+    if width not in children:
+        children[width] = (spark.newSession(), {})
+    child, frames = children[width]
+    if not _sql_conf(spark).updated(_WIDTH, str(width)).equals(_sql_conf(child)):
+        want = {**spark.conf.getAll, _WIDTH: str(width)}
         have = child.conf.getAll
         for key, value in want.items():
             if have.get(key) != value:
                 child.conf.set(key, value)
         for key in have.keys() - want.keys():
             child.conf.unset(key)
-    return child
+        frames.clear()
+    return child, frames
+
+
+def _sql_conf(spark: SparkSession):
+    """The session's SQL conf as the JVM's own map (not read into Python)."""
+    return spark._jsparkSession.sessionState().conf().getAllConfs()
 
 
 def tune_runtime(spark: SparkSession) -> None:

@@ -9,7 +9,6 @@ neither; the code paths are real and the formats plug in on a cluster.
 
 from realtimechurnpredictiondataengineering_spark.sources.batch import (
     TABLES,
-    convert_to_parquet,
     delta_available,
     delta_scan,
     load_table,
@@ -39,7 +38,6 @@ from realtimechurnpredictiondataengineering_spark.sources.streaming import (
 
 __all__ = [
     "TABLES",
-    "convert_to_parquet",
     "delta_available",
     "delta_scan",
     "load_table",

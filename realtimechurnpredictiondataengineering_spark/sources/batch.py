@@ -120,18 +120,3 @@ def read_format(
         options.setdefault("header", "true")
         options.setdefault("inferSchema", "true")
     return reader.options(**options).load(path)
-
-
-def convert_to_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Ingest-side columnar conversion: land any source as parquet,
-    optionally hive-partitioned so downstream date/key filters prune
-    whole directories instead of reading row groups to discard them."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -28,7 +28,7 @@ from realtimechurnpredictiondataengineering_spark.operators.filters import (
     SILVER_PIPELINES,
     silver_frame,
 )
-from realtimechurnpredictiondataengineering_spark.session import stream_session
+from realtimechurnpredictiondataengineering_spark.session import stream_frame
 from realtimechurnpredictiondataengineering_spark.sources.sinks import foreach_batch_dual_sink
 from realtimechurnpredictiondataengineering_spark.sources.streaming import json_topic_stream
 
@@ -69,11 +69,22 @@ def run_silver_dual_sink(
     per sink per micro-batch, a cost that does not depend on its rows.
     ``spark``'s own conf is not changed.  A checkpoint created at
     another width keeps that width (the offset log pins it at batch 0),
-    so a checkpoint written at cores width drains on at cores width."""
+    so a checkpoint written at cores width drains on at cores width.
+
+    The reference's Silver queries run for good and build their plans
+    once; a drain here starts its queries anew.  So the built
+    ``silver_stream`` frame is kept with the child session
+    (``session.stream_frame``), one per entity, and only rebuilt when
+    ``source_path`` changes or a conf change on ``spark`` reaches the
+    child: a repeated drain costs a query start and no plan build."""
     from realtimechurnpredictiondataengineering_spark.sources.sinks import keyed_json
 
-    cleaned = silver_stream(
-        stream_session(spark, len(SILVER_PIPELINES)), entity, source_path
+    cleaned = stream_frame(
+        spark,
+        len(SILVER_PIPELINES),
+        entity,
+        source_path,
+        lambda child: silver_stream(child, entity, source_path),
     )
     key_col = SILVER_PIPELINES[entity].keys[0]
 

@@ -124,19 +124,3 @@ def test_read_format_roundtrip_csv_json(spark, tmp_path):
     got_json = b.read_format(spark, json_p, "json", schema="id int, s string")
     assert sorted((r["id"], r["s"]) for r in got_csv.collect()) == [(1, "a"), (2, "b")]
     assert sorted((r["id"], r["s"]) for r in got_json.collect()) == [(1, "a"), (2, "b")]
-
-
-def test_convert_to_parquet_partition_pruning(spark, tmp_path):
-    from realtimechurnpredictiondataengineering_spark.sources import batch as b
-
-    src = spark.createDataFrame(
-        [(1, "2024-01-01", 5.0), (2, "2024-01-02", 6.0), (3, "2024-01-02", 7.0)],
-        "id int, day string, v double",
-    )
-    dst = str(tmp_path / "part")
-    b.convert_to_parquet(src, dst, partition_by=("day",))
-    scan = spark.read.parquet(dst).filter(F.col("day") == "2024-01-02")
-    # the partition filter prunes directories, not rows
-    full = scan._jdf.queryExecution().toString()
-    assert "PartitionFilters" in full and "2024-01-02" in full
-    assert scan.count() == 2

@@ -247,10 +247,97 @@ def test_stream_session_follows_parent_conf_except_width(spark):
         assert child.conf.get(tz) == "Asia/Tokyo"
         assert child.conf.get(probe, None) is None
         assert child.conf.get(width) == str(stream_state_partitions(spark))
+        # a key set on the child itself is reset on the next call
+        child.conf.set(tz, "Europe/Paris")
+        child.conf.set(probe, "child")
+        assert stream_session(spark) is child
+        assert child.conf.get(tz) == "Asia/Tokyo"
+        assert child.conf.get(probe, None) is None
     finally:
         spark.conf.set(tz, saved_tz)
         spark.conf.unset(probe)
     assert stream_session(spark).conf.get(tz) == saved_tz
+
+
+def test_repeated_silver_drains_build_the_plan_once(spark, tmp_path, monkeypatch):
+    # a drain starts its query anew; the built plan is kept with the
+    # child session, one per entity, and replaced when the source changes
+    real, built = pipelines.silver_stream, []
+
+    def spy(child, entity, source_path, **kwargs):
+        built.append(source_path)
+        return real(child, entity, source_path, **kwargs)
+
+    monkeypatch.setattr(pipelines, "silver_stream", spy)
+    feeds = [synthetic_topic_feed(spark, n, seed) for n, seed in ((150, "1"), (200, "2"))]
+    lands = [str(tmp_path / d) for d in ("a", "b")]
+    for land in lands:
+        feeds[0].coalesce(1).write.json(land)
+
+    def drain(land):
+        name = land[-1]
+        _drain(pipelines.run_silver_dual_sink(
+            spark, "usage", land, str(tmp_path / "out" / name), str(tmp_path / "ckpt" / name)
+        ))
+        return spark.read.parquet(str(tmp_path / "out" / name / "table")).count()
+
+    from realtimechurnpredictiondataengineering_spark.plans.silver import silver_tables_from_feed
+
+    first = drain(lands[0])
+    feeds[1].coalesce(1).write.mode("append").json(lands[0])
+    # the kept plan reads the files landed since, without a row twice
+    want = silver_tables_from_feed(feeds[0].unionByName(feeds[1]))["usage"].count()
+    assert first < drain(lands[0]) == want
+    assert drain(lands[0]) == want
+    drain(lands[1])
+    drain(lands[1])
+    drain(lands[0])
+    assert built == [lands[0], lands[1], lands[0]]
+
+
+def test_silver_drain_rebuilds_its_plan_when_the_timezone_changes(spark, tmp_path):
+    # from_json binds the session timezone into the plan when it is
+    # analyzed; a timestamp without an offset parses in that zone
+    from realtimechurnpredictiondataengineering_spark.operators.filters import silver_frame
+    from realtimechurnpredictiondataengineering_spark.sources.streaming import VALUE_TOPIC_SCHEMA
+
+    land, out, ckpt = (str(tmp_path / d) for d in ("land", "silver", "ckpt"))
+    tz = "spark.sql.session.timeZone"
+
+    def land_usage(name, ids):
+        path = tmp_path / "land" / name
+        path.parent.mkdir(exist_ok=True)
+        path.write_text("".join(
+            json.dumps({"value": json.dumps(
+                {"customer_id": i, "sessions_last_30d": 3, "last_login": "2024-01-05 10:00:00"}
+            ), "topic": TOPICS[1]}) + "\n"
+            for i in ids
+        ))
+
+    def last_login(df, ids):
+        rows = df.filter(F.col("customer_id").isin(*ids)).select(
+            "customer_id", F.col("last_login").cast("long").alias("t")
+        ).collect()
+        return {r["customer_id"]: r["t"] for r in rows}
+
+    saved = spark.conf.get(tz)
+    try:
+        spark.conf.set(tz, "UTC")
+        land_usage("a.json", range(5))
+        _drain(pipelines.run_silver_dual_sink(spark, "usage", land, out, ckpt))
+        spark.conf.set(tz, "America/New_York")
+        land_usage("b.json", range(5, 10))
+        _drain(pipelines.run_silver_dual_sink(spark, "usage", land, out, ckpt))
+        table = spark.read.parquet(f"{out}/table")
+        twin = silver_frame(
+            spark.read.schema(VALUE_TOPIC_SCHEMA).json(str(tmp_path / "land" / "b.json")), "usage"
+        )
+        want = last_login(twin, range(5, 10))
+        assert last_login(table, range(5, 10)) == want
+        assert len(want) == 5
+        assert set(want.values()).isdisjoint(last_login(table, range(5)).values())
+    finally:
+        spark.conf.set(tz, saved)
 
 
 def test_stream_session_is_one_child_under_concurrent_callers(spark):
